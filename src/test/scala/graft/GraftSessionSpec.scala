@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 class GraftSessionSpec extends SparkSpec {
 
   test("builder pins the engine posture: extensions, UTC, nanos shim, partitions") {
@@ -30,5 +32,23 @@ class GraftSessionSpec extends SparkSpec {
     // a driver-side core count must never be baked into a cluster config
     assert(GraftSession.defaultShufflePartitions("spark://example:7077") == 200)
     assert(GraftSession.defaultShufflePartitions("yarn") == 200)
+  }
+
+  test("the codegen cache holds the headline working set: a third pass compiles nothing") {
+    // the test session is built by GraftSession.builder, so it carries
+    // the pinned cache size (a static conf, fixed at first codegen)
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def pass(): Unit = SparkEntry.benchQueries.foreach { key =>
+      SparkEntry.queries(key)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      CacheLifecycle.sweep(spark)
+    }
+    pass()
+    pass()
+    val before = compiled
+    pass()
+    assert(compiled == before,
+      s"${compiled - before} classes recompiled on a warm pass over the headline")
   }
 }

@@ -32,12 +32,18 @@ class ScaleSlopeSpec extends SparkSpec {
   /** Deliberately quadratic: an all-pairs theta join over `orders`
     * (1.5k rows at sf0.001 → 15k at sf0.01 = 100× the pairs) with a
     * per-pair md5 chain heavy enough (~1.5 µs/pair) that genuine work,
-    * not fixed overhead, dominates both walls. NEVER registered in
-    * SparkEntry — it exists to prove the gate bites. */
+    * not fixed overhead, dominates both walls. The streamed side is
+    * spread over the session's 4 cores (each fixture is one file, so it
+    * would otherwise scan as one partition and run the pair loop on one
+    * core): the pair loop's wall falls to a quarter, and the ratio of
+    * the two walls stays that of the pair counts. A lighter chain does
+    * not work: the small run has ~0.5 s of fixed cost (planning, the
+    * broadcast, four jobs), so its wall stops shrinking with the chain
+    * and the large run falls below twice the breach threshold. NEVER registered
+    * in SparkEntry — it exists to prove the gate bites. */
   private def quadratic(dir: String): DataFrame = {
-    val o = spark.read.parquet(s"$dir/orders.parquet")
-      .select(col("o_orderkey").as("k"))
-    o.as("a").join(o.as("b"),
+    val o = Tables.orders(spark, dir).select(col("o_orderkey").as("k"))
+    o.repartition(4).as("a").join(o.as("b"),
         (col("a.k") + col("b.k")) % 7 =!= 3) // non-equi: no hash path
       .select(md5(concat(md5(concat_ws(":", col("a.k"), col("b.k"))),
         md5(concat_ws("-", col("b.k"), col("a.k"))))).as("h"))
@@ -70,6 +76,8 @@ class ScaleSlopeSpec extends SparkSpec {
     wallOf(quadratic(smallDir))
     val qw1 = wallOf(quadratic(smallDir))
     val qw2 = wallOf(quadratic(largeDir))
+    info(f"linear $lw1%.2fs -> $lw2%.2fs; quadratic $qw1%.2fs -> $qw2%.2fs, " +
+      f"breach threshold ${SlopeGate.DefaultCap * math.max(qw1, SlopeGate.DefaultFloorS)}%.2fs")
     assert(SlopeGate.breach(qw1, qw2),
       f"quadratic control NOT flagged: $qw1%.2fs -> $qw2%.2fs " +
         f"(cap ${SlopeGate.DefaultCap}%.0f, floor ${SlopeGate.DefaultFloorS}%.1fs)")

@@ -13,13 +13,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   // One session for the whole test JVM (Test / fork := true): cuts startup
   // cost and mirrors how the driver harness runs queries back to back.
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  // Built by the library's own factory, so tests run under the engine's
+  // posture (4 shuffle partitions, UTC, nanos shim, extensions, codegen
+  // cache size).
+  lazy val session: SparkSession = GraftSession.builder("local[4]")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
