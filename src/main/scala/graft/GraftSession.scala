@@ -18,7 +18,10 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to the master's parallelism for local
   *    runs; ON A CLUSTER leave the default and let AQE coalesce;
   *  - a codegen class cache that holds the working set
-  *    ([[CodegenCacheEntries]]).
+  *    ([[CodegenCacheEntries]]);
+  *  - `file:` bound to [[NioLocalFileSystem]], which sets the modes of
+  *    the files and dirs a local write creates in-process instead of
+  *    forking one `chmod` each.
   *
   * Reference: /root/reference is empty (SURVEY.md §0.1); this is the
   * engine-configuration contract the harness mains execute against.
@@ -67,6 +70,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
   }
 

@@ -28,12 +28,23 @@ import org.apache.spark.sql.functions._
   *     _graft_delta_meta   keys + checkpoint cadence, written once at
   *                         create (layout facts a reader must know)
   *     c1/                 checkpoint parquet: the FULL state at v1
+  *       _graft_schema     its recorded schema (see below)
   *     d2/ d3/ …           per-version change files: table columns +
   *                         `_op` ∈ {U, D} (upsert / delete-by-key)
+  *       _graft_schema     its recorded schema
   *     c4/ …               periodic checkpoint (ALSO has d4 — the
   *                         change record stays, so the changelog is
   *                         complete at every version)
+  *     .stage_d_<id>/      an in-flight commit's staged change files
+  *       _graft_schema     and schema; renamed to d{v} whole
   * }}}
+  *
+  * Every chain directory is written by [[writeDir]], which lands the
+  * schema sidecar with the parquet before the manifest can publish the
+  * version, and read by [[readDir]] under that schema — so no read of a
+  * delta, checkpoint or staging dir starts a footer-inference job. A
+  * published dir never changes, so its recorded schema holds for good;
+  * only a dir written before sidecars existed is read by inference.
   *
   * Commit protocol: write `d{n+1}` (and `c{n+1}` when the cadence is
   * due) COMPLETELY, then publish the manifest — a crash mid-commit
@@ -213,7 +224,7 @@ object DeltaChain {
       m: Meta,
       version: Int): Seq[String] = {
     val cp = diskCheckpoints(baseDir).filter(_ <= version).max
-    val base = checkpointSchema(spark, baseDir, cp).fieldNames.toSeq
+    val base = storedSchema(spark, checkpointDir(baseDir, cp)).fieldNames.toSeq
     m.schemaEvents.filter(e => e.version > cp && e.version <= version)
       .foldLeft(base) { (cols, e) =>
         e match {
@@ -227,33 +238,34 @@ object DeltaChain {
 
   private val SchemaSidecar = "_graft_schema"
 
-  /** The checkpoint's stored schema — from the DDL sidecar written
-    * with it (authoritative: survives Hive partition-column type
-    * inference, readable even when the state was empty; ADVICE r15),
-    * falling back to the parquet footer for pre-sidecar checkpoints. */
-  private def checkpointSchema(
-      spark: SparkSession,
-      baseDir: String,
-      v: Int): org.apache.spark.sql.types.StructType = {
-    val p = Paths.get(checkpointDir(baseDir, v), SchemaSidecar)
-    if (Files.exists(p))
-      org.apache.spark.sql.types.StructType.fromDDL(
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-    else spark.read.parquet(checkpointDir(baseDir, v)).schema
+  /** A chain directory's stored schema — from the sidecar [[writeDir]]
+    * lands with it (authoritative: survives Hive partition-column type
+    * inference, readable even when the dir holds no rows; ADVICE r15),
+    * falling back to the parquet footer (one inference job) for a dir
+    * written before sidecars. New sidecars are JSON, which keeps field
+    * metadata and UDTs the way the footer does; older checkpoint
+    * sidecars are DDL. */
+  private def storedSchema(
+      spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType = {
+    val p = Paths.get(dir, SchemaSidecar)
+    if (!Files.exists(p)) spark.read.parquet(dir).schema
+    else {
+      val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      if (s.startsWith("{"))
+        org.apache.spark.sql.types.DataType.fromJson(s)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
+      else org.apache.spark.sql.types.StructType.fromDDL(s)
+    }
   }
 
-  /** Read checkpoint `v` under its recorded schema — partition-column
-    * TYPES come from the sidecar, never from Hive dir-name inference
-    * (which would silently retype a numeric-looking string partition
-    * value, e.g. '01' -> 1, and corrupt replay; ADVICE r15). */
-  private def readCheckpoint(
-      spark: SparkSession, baseDir: String, v: Int): DataFrame = {
-    val p = Paths.get(checkpointDir(baseDir, v), SchemaSidecar)
-    if (Files.exists(p))
-      spark.read.schema(checkpointSchema(spark, baseDir, v))
-        .parquet(checkpointDir(baseDir, v))
-    else spark.read.parquet(checkpointDir(baseDir, v))
-  }
+  /** Read a chain directory (checkpoint, change record or staging dir)
+    * under its stored schema — partition-column TYPES come from the
+    * sidecar, never from Hive dir-name inference (which would silently
+    * retype a numeric-looking string partition value, e.g. '01' -> 1,
+    * and corrupt replay; ADVICE r15), and no footer is read at plan
+    * time. */
+  private def readDir(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(storedSchema(spark, dir)).parquet(dir)
 
   def versions(baseDir: String): Seq[Int] = VersionedTable.versions(baseDir)
   def latestVersion(baseDir: String): Int = VersionedTable.latestVersion(baseDir)
@@ -293,7 +305,7 @@ object DeltaChain {
       "DeltaChain.create: partitioning on a key column partitions every " +
         "upsert to a singleton dir — pick a coarser column")
     Files.createDirectories(Paths.get(baseDir))
-    writeCheckpoint(df, baseDir, 1, partitionBy)
+    writeDir(df, checkpointDir(baseDir, 1), partitionBy)
     val partsLine =
       if (partitionBy.isEmpty) "" else s";parts=${partitionBy.mkString(",")}"
     Files.write(metaPath(baseDir),
@@ -303,9 +315,14 @@ object DeltaChain {
     1
   }
 
-  private def writeCheckpoint(
-      df: DataFrame, baseDir: String, v: Int, parts: Seq[String]): Unit = {
-    val dir = checkpointDir(baseDir, v)
+  /** Write a chain directory: `df` as parquet (Hive-partitioned on
+    * `parts`, for checkpoints) plus its schema sidecar. Every writer —
+    * checkpoints, staged deltas, empty change records — goes through
+    * here, and always before the manifest publishes the version (a
+    * staging dir carries its sidecar through the rename), so a reader
+    * never resolves a directory without it. */
+  private def writeDir(
+      df: DataFrame, dir: String, parts: Seq[String] = Seq.empty): Unit = {
     val w = df.write.mode("errorifexists")
     (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(dir)
     // A partitioned write of an EMPTY state leaves no parquet footer at
@@ -316,13 +333,8 @@ object DeltaChain {
     // (ADVICE r15).
     if (parts.nonEmpty && !hasParquetUnder(new java.io.File(dir)))
       df.limit(0).coalesce(1).write.mode("append").parquet(dir)
-    // Schema sidecar: the authoritative read schema for this
-    // checkpoint — partition-column types survive the Hive round-trip
-    // (dir-name inference would retype '01' -> 1), and an empty
-    // sentinel stays typed. Written before the manifest publish, so a
-    // reader never resolves a checkpoint without it.
     Files.write(Paths.get(dir, SchemaSidecar),
-      df.schema.toDDL.getBytes(StandardCharsets.UTF_8))
+      df.schema.json.getBytes(StandardCharsets.UTF_8))
   }
 
   private def hasParquetUnder(f: java.io.File): Boolean =
@@ -351,8 +363,8 @@ object DeltaChain {
     val current = latestVersion(baseDir)
     require(current > 0, s"DeltaChain.commitDelta: $baseDir has no v1 — create() first")
     val lastCp = diskCheckpoints(baseDir).max // disk view: see truncate
-    // the authoritative column list = latest checkpoint footer plus
-    // metadata-only additions — one metadata read, never a replay
+    // the authoritative column list = latest checkpoint's stored schema
+    // plus metadata-only additions — one sidecar read, never a replay
     val tableCols = tableColsAt(spark, baseDir, m, current)
     val next = current + 1
     // STAGE ONCE, validate from the staged files, atomically rename into
@@ -364,7 +376,7 @@ object DeltaChain {
     val shaped = shape(delta, tableCols, deleteCol, "DeltaChain.commitDelta")
     val staging = Paths.get(baseDir,
       s".stage_d_${java.util.UUID.randomUUID().toString.take(12)}")
-    shaped.write.mode("errorifexists").parquet(staging.toString)
+    writeDir(shaped, staging.toString)
     try validateStaged(spark, staging.toString, m.keys,
       "DeltaChain.commitDelta", activeConstraints(m))
     catch { case t: Throwable => deleteStagingRecursively(staging); throw t }
@@ -374,8 +386,8 @@ object DeltaChain {
       // materialize by replaying from the last checkpoint INCLUDING the
       // just-written delta dir (readable before publish — the manifest,
       // not dir existence, is the reader-visibility point)
-      writeCheckpoint(replay(spark, baseDir, lastCp, next, tableCols, m.keys),
-        baseDir, next, m.partitionCols)
+      writeDir(replay(spark, baseDir, lastCp, next, tableCols, m.keys),
+        checkpointDir(baseDir, next), m.partitionCols)
     }
     VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
     next
@@ -421,10 +433,11 @@ object DeltaChain {
     * recomputed an arbitrary upstream plan twice per commit). Reading
     * the staged parquet back prunes to keys + constraint columns +
     * `_op`, so validation cost is ∝ staged key/constraint bytes, not
-    * the delta's full compute. The caller deletes the staging dir on
-    * failure — nothing is committed (the manifest, not dir existence,
-    * is the reader-visibility point, and `.stage_d_*` dirs are
-    * janitor-swept). */
+    * the delta's full compute; the read is under the staged sidecar,
+    * so it starts no footer-inference job. The caller deletes the
+    * staging dir on failure — nothing is committed (the manifest, not
+    * dir existence, is the reader-visibility point, and `.stage_d_*`
+    * dirs are janitor-swept). */
   private def validateStaged(
       spark: SparkSession,
       stagedDir: String,
@@ -438,7 +451,7 @@ object DeltaChain {
     val conCounts: Seq[org.apache.spark.sql.Column] = constraints.map { c =>
       count(when(col(OpCol) === "U" && (expr(c.sql) <=> lit(false)), 1))
     }
-    val counted = spark.read.parquet(stagedDir)
+    val counted = readDir(spark, stagedDir)
       .agg(count(lit(1)), countDistinct(keys.head, keys.tail: _*) +:
         count(when(keys.map(col(_).isNull).reduce(_ || _), 1)) +:
         conCounts: _*)
@@ -469,11 +482,11 @@ object DeltaChain {
       tableCols: Seq[String],
       keys: Seq[String]): DataFrame = {
     val m = meta(baseDir)
-    val cp = projectTo(readCheckpoint(spark, baseDir, fromCp), m, fromCp, to)
+    val cp = projectTo(readDir(spark, checkpointDir(baseDir, fromCp)), m, fromCp, to)
       .select(tableCols.map(col) :+ lit("I").as(OpCol): _*)
       .withColumn("_seq", lit(fromCp))
     val deltas = ((fromCp + 1) to to).map { v =>
-      projectTo(spark.read.parquet(deltaDir(baseDir, v)), m, v, to)
+      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, to)
         .select(tableCols.map(col) :+ col(OpCol): _*)
         .withColumn("_seq", lit(v))
     }
@@ -489,7 +502,7 @@ object DeltaChain {
       s"DeltaChain.readAsOf: version $version not in committed " +
         s"versions ${versions(baseDir).mkString("[", ",", "]")} of $baseDir")
     if (hasCheckpoint(baseDir, version))
-      readCheckpoint(spark, baseDir, version)
+      readDir(spark, checkpointDir(baseDir, version))
     else {
       // disk-based resolution: after truncate the anchor checkpoint
       // may outlive its manifest entry (see [[truncate]])
@@ -528,7 +541,7 @@ object DeltaChain {
         // pre-event deltas project like every other reader, so a
         // window spanning a schema change unions cleanly and the
         // consumer sees one schema (the window-end's)
-        projectTo(spark.read.parquet(deltaDir(baseDir, v)), m, v, toVersion)
+        projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, toVersion)
           .withColumn("_commit_version", lit(v))
       }
       .reduce(_.unionByName(_))
@@ -559,7 +572,7 @@ object DeltaChain {
     val old = prev.select(dataCols.map(c => col(c).as(s"__old_$c")): _*)
       .withColumn("__graft_in_prev", lit(true))
     val d = projectTo(
-      spark.read.parquet(deltaDir(baseDir, version)), m, version, version)
+      readDir(spark, deltaDir(baseDir, version)), m, version, version)
     val joinCond = m.keys.map(k => col(k) <=> col(s"__old_$k")).reduce(_ && _)
     val joined = d.join(old, joinCond, "left_outer")
     val present = col("__graft_in_prev").isNotNull
@@ -606,10 +619,10 @@ object DeltaChain {
     // the empty change record keeps the every-version-has-d{v}
     // invariant and makes the optimize commit changelog-neutral
     writeEmptyChangeRecord(spark, baseDir, m, current, tableCols, next)
-    writeCheckpoint(
+    writeDir(
       replay(spark, baseDir, lastCp, next, tableCols, m.keys)
         .coalesce(numFiles),
-      baseDir, next, m.partitionCols)
+      checkpointDir(baseDir, next), m.partitionCols)
     VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
     // kind recorded AT COMMIT, manifest-first (ADVICE r15): history()
     // must never have to infer "optimize" from the empty-delta+
@@ -631,11 +644,12 @@ object DeltaChain {
       next: Int,
       transform: DataFrame => DataFrame = identity): Unit = {
     val cp = diskCheckpoints(baseDir).max
-    transform(projectTo(readCheckpoint(spark, baseDir, cp), m, cp, current)
-        .where(lit(false)))
-      .select(tableCols.map(col) :+ lit("U").as(OpCol): _*)
-      .coalesce(1)
-      .write.mode("errorifexists").parquet(deltaDir(baseDir, next))
+    writeDir(
+      transform(projectTo(readDir(spark, checkpointDir(baseDir, cp)), m, cp, current)
+          .where(lit(false)))
+        .select(tableCols.map(col) :+ lit("U").as(OpCol): _*)
+        .coalesce(1),
+      deltaDir(baseDir, next))
   }
 
   private def appendMetaLine(baseDir: String, line: String): Unit = {
@@ -667,11 +681,11 @@ object DeltaChain {
       s"DeltaChain.optimizeClustered: ($xCol, $yCol) must be table columns")
     val next = current + 1
     writeEmptyChangeRecord(spark, baseDir, m, current, tableCols, next)
-    writeCheckpoint(
+    writeDir(
       ZOrder.cluster(
         replay(spark, baseDir, lastCp, next, tableCols, m.keys),
         xCol, yCol, numFiles),
-      baseDir, next, m.partitionCols)
+      checkpointDir(baseDir, next), m.partitionCols)
     VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
     appendMetaLine(baseDir, s"kind\t$next\toptimize")
     next
@@ -741,11 +755,11 @@ object DeltaChain {
     val m = meta(baseDir)
     val cpv = diskCheckpoints(baseDir).filter(_ <= fromVersion).max
     val tableCols = tableColsAt(spark, baseDir, m, toVersion)
-    val cp = projectTo(readCheckpoint(spark, baseDir, cpv), m, cpv, toVersion)
+    val cp = projectTo(readDir(spark, checkpointDir(baseDir, cpv)), m, cpv, toVersion)
       .select(tableCols.map(col) :+ lit("I").as(OpCol): _*)
       .withColumn("_seq", lit(cpv))
     val all = ((cpv + 1) to toVersion).map { v =>
-      projectTo(spark.read.parquet(deltaDir(baseDir, v)), m, v, toVersion)
+      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, toVersion)
         .select(tableCols.map(col) :+ col(OpCol): _*)
         .withColumn("_seq", lit(v))
     }.foldLeft(cp)(_.unionByName(_))
@@ -773,7 +787,7 @@ object DeltaChain {
     val joined =
       if (rangePruneActive(baseDir, fromVersion, toVersion)) all.join(
         ((fromVersion + 1) to toVersion).map { v =>
-          projectTo(spark.read.parquet(deltaDir(baseDir, v)), m, v, toVersion)
+          projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, toVersion)
             .select(m.keys.map(col): _*)
         }.reduce(_.unionByName(_)).distinct(),
         m.keys, "left_semi")
@@ -874,7 +888,7 @@ object DeltaChain {
             "DeltaChain.commitDeltaArbitrated")
           staging = Paths.get(baseDir,
             s".stage_d_${java.util.UUID.randomUUID().toString.take(12)}")
-          shaped.write.mode("errorifexists").parquet(staging.toString)
+          writeDir(shaped, staging.toString)
           validateStaged(spark, staging.toString, m.keys,
             "DeltaChain.commitDeltaArbitrated", cons)
           stagedCols = tableCols
@@ -889,9 +903,9 @@ object DeltaChain {
             StandardCopyOption.ATOMIC_MOVE)
           staging = null // moved — nothing left to clean
           if (next - lastCp >= m.checkpointEvery) {
-            writeCheckpoint(
+            writeDir(
               replay(spark, baseDir, lastCp, next, tableCols, m.keys),
-              baseDir, next, m.partitionCols)
+              checkpointDir(baseDir, next), m.partitionCols)
           }
           VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
           return (next, attempt)
@@ -954,13 +968,8 @@ object DeltaChain {
     val next = current + 1
     // the empty change record: zero rows, widened schema — keeps the
     // replay/changelog invariant that every version v >= 2 has d{v}
-    val cp = diskCheckpoints(baseDir).max
-    projectTo(readCheckpoint(spark, baseDir, cp), m, cp, current)
-      .where(lit(false))
-      .withColumn(name, expr(defaultSql))
-      .select((curCols :+ name).map(col) :+ lit("U").as(OpCol): _*)
-      .coalesce(1)
-      .write.mode("errorifexists").parquet(deltaDir(baseDir, next))
+    writeEmptyChangeRecord(spark, baseDir, m, current, curCols :+ name, next,
+      _.withColumn(name, expr(defaultSql)))
     // MANIFEST FIRST, metadata line second (ADVICE r14): the reverse
     // order left a phantom addcol entry bound to an uncommitted
     // version on a crash between the two writes — after orphan-dir
@@ -1195,10 +1204,10 @@ object DeltaChain {
     val headFields: Map[String, org.apache.spark.sql.types.DataType] = {
       val dd = diskDeltas(baseDir)
       if (dd.nonEmpty)
-        spark.read.parquet(deltaDir(baseDir, dd.max)).schema
+        storedSchema(spark, deltaDir(baseDir, dd.max))
           .map(f => f.name -> f.dataType).toMap
       else
-        checkpointSchema(spark, baseDir, diskCheckpoints(baseDir).max)
+        storedSchema(spark, checkpointDir(baseDir, diskCheckpoints(baseDir).max))
           .map(f => f.name -> f.dataType).toMap +
           (OpCol -> org.apache.spark.sql.types.StringType)
     }
@@ -1487,16 +1496,16 @@ object DeltaChain {
     // shuffled) once.
     val cpv = diskCheckpoints(baseDir).filter(_ <= toVersion).max
     val pay = struct(tableCols.map(col): _*)
-    val cp = projectTo(readCheckpoint(spark, baseDir, cpv), m, cpv, current)
+    val cp = projectTo(readDir(spark, checkpointDir(baseDir, cpv)), m, cpv, current)
       .select(tableCols.map(col) :+ lit("I").as(OpCol): _*)
       .withColumn("_seq", lit(cpv))
     val all = ((cpv + 1) to current).map { v =>
-      projectTo(spark.read.parquet(deltaDir(baseDir, v)), m, v, current)
+      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, current)
         .select(tableCols.map(col) :+ col(OpCol): _*)
         .withColumn("_seq", lit(v))
     }.foldLeft(cp)(_.unionByName(_))
     val touched = ((toVersion + 1) to current).map { v =>
-      projectTo(spark.read.parquet(deltaDir(baseDir, v)), m, v, current)
+      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, current)
         .select(m.keys.map(col): _*)
     }.reduce(_.unionByName(_)).distinct()
     val grouped = all.join(touched, m.keys, "left_semi")

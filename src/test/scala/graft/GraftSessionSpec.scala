@@ -1,5 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.metrics.source.CodegenMetrics
 
 class GraftSessionSpec extends SparkSpec {
@@ -50,5 +57,36 @@ class GraftSessionSpec extends SparkSpec {
     pass()
     assert(compiled == before,
       s"${compiled - before} classes recompiled on a warm pass over the headline")
+  }
+
+  test("file: sets modes in-process, and the modes Hadoop's own path would set") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.getFileSystemClass("file", conf) == classOf[NioLocalFileSystem])
+    assert(FileSystem.get(new java.net.URI("file:///"), conf).isInstanceOf[NioLocalFileSystem])
+    val root = Files.createTempDirectory("graft-fs")
+    QueryGuard.deleteRecOnExit(root.toFile)
+    // a parquet write through the session: files rw-r--r--, dirs rwxr-xr-x
+    val out = root.resolve("w").toString
+    spark.range(10).repartition(2).write.parquet(out)
+    val walk = Files.walk(Paths.get(out))
+    val modes = try walk.iterator().asScala.toSeq.map { p =>
+      Files.isDirectory(p) -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    } finally walk.close()
+    assert(modes.count(!_._1) >= 4) // two part files and their .crc siblings
+    modes.foreach { case (dir, m) => assert(m == (if (dir) "rwxr-xr-x" else "rw-r--r--")) }
+    // the raw file system sets exactly what the stock one does, sticky
+    // bit included (which it leaves to the stock path)
+    def modeAfter(fs: RawLocalFileSystem, name: String, perm: Int): AnyRef = {
+      fs.initialize(java.net.URI.create("file:///"), conf)
+      val p = root.resolve(name)
+      Files.createDirectory(p)
+      fs.setPermission(new Path(p.toUri), new FsPermission(perm.toShort))
+      Files.getAttribute(p, "unix:mode")
+    }
+    Seq("755", "644", "600", "444", "1755").foreach { octal =>
+      val perm = Integer.parseInt(octal, 8)
+      assert(modeAfter(new NioRawLocalFileSystem, s"nio$octal", perm) ==
+        modeAfter(new RawLocalFileSystem, s"stock$octal", perm), s"mode $octal")
+    }
   }
 }
