@@ -14,12 +14,10 @@ set -uo pipefail
 cd "$(dirname "$0")/.."
 
 N="${1:-5}"
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 OUT=target/racegate
 mkdir -p "$OUT"
 
-run() { java $OPENS -cp "$CP" -Xmx3g graft.RaceGate "$@"; }
+run() { JVM_MEM=3g scripts/runmain.sh graft.RaceGate "$@"; }
 
 fail=0
 for form in snap delta; do

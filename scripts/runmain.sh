@@ -1,11 +1,13 @@
 #!/usr/bin/env bash
 # Run a graft main class directly against compiled classes + the Spark
 # distribution jars — no sbt lock, no sbt startup overhead, so timing
-# probes (ProbeOne/Bench/PlanDump) can run back to back while sbt does
-# other work. Mirrors build.sbt's javaOptions (add-opens, UI off, UTC).
+# probes (graft.Cli probe/plan, Bench) can run back to back while sbt
+# does other work, and the gate scripts get one launcher. Mirrors
+# build.sbt's javaOptions (add-opens, UI off, UTC).
 #
 # Usage: scripts/runmain.sh <MainClass> [args...]
-#   env: SPARK_GRAFT_CPUS (default 32), JVM_MEM (default 8g)
+#   env: JVM_MEM (heap, default 8g); SPARK_GRAFT_CPUS is read by the
+#   main itself (GraftSession.mainBuilder)
 set -uo pipefail
 cd "$(dirname "$0")/.."
 

@@ -15,8 +15,7 @@
 #
 # Usage: scripts/slope_full.sh [keysFile] [batchSize]
 #   keysFile: one registry key per line — regenerate with
-#     java -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-#       graft.DumpKeys > /tmp/all_keys.txt
+#     scripts/runmain.sh graft.Cli keys > /tmp/all_keys.txt
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
@@ -25,9 +24,6 @@ BATCH="${2:-40}"
 OUT=target/slope_r13
 mkdir -p "$OUT"
 EXCLUDE="q9_cosine_selfjoin q9b_cosine_selfjoin_t038 l3_cosine_pairs l4_topk_neighbors l4b_topk_agg"
-
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 
 grep -vxF -f <(printf '%s\n' $EXCLUDE) "$KEYS_FILE" > "$OUT/keys_included.txt"
 TOTAL=$(wc -l < "$OUT/keys_included.txt")
@@ -45,9 +41,8 @@ for bf in "$OUT"/batch_*; do
   SPARK_GRAFT_SLOPE_DIR=target/sf1 \
   SPARK_GRAFT_TRIPWIRE_BUDGET_S=120 \
   SPARK_GRAFT_SLOPE_BUDGET_S=900 \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-24}" \
-    java $OPENS -Xmx16g -cp "$CP" graft.Tripwire /root/testdata/sf0.1 \
-    > "$bf.log" 2>&1
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-24}" JVM_MEM=16g \
+    scripts/runmain.sh graft.Tripwire /root/testdata/sf0.1 > "$bf.log" 2>&1
   rc=$?
   if [[ $rc -ne 0 ]]; then
     fail=$((fail + 1))

@@ -8,8 +8,8 @@
 #           exercises its spill path
 # and PASSES only if (a) every query's order-independent content hash
 # is identical across the two runs and (b) run B recorded nonzero
-# spill. Plain `java -cp` (not sbt) so the two JVMs can't share state
-# and the sbt lock stays free.
+# spill. Through scripts/runmain.sh (not sbt) so the two JVMs can't
+# share state and the sbt lock stays free.
 #
 # Usage: scripts/spillgate.sh [sfDir] [smallHeap] [forceElems]
 #
@@ -32,16 +32,14 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.1}"
 SMALL="${2:-2g}"
 FORCE="${3:-262144}"
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 
 echo "[spillgate] run A: -Xmx8g (reference)" >&2
-A=$(java $OPENS -Xmx8g -cp "$CP" graft.SpillGate "$SF" 2>/dev/null | tail -1)
+A=$(JVM_MEM=8g scripts/runmain.sh graft.SpillGate "$SF" 2>/dev/null | tail -1)
 echo "[spillgate] A: $A" >&2
 
 echo "[spillgate] run B: -Xmx$SMALL + forceSpillThreshold=$FORCE" >&2
-B=$(SPARK_GRAFT_FORCE_SPILL_ELEMS="$FORCE" \
-    java $OPENS -Xmx"$SMALL" -cp "$CP" graft.SpillGate "$SF" 2>/dev/null | tail -1)
+B=$(SPARK_GRAFT_FORCE_SPILL_ELEMS="$FORCE" JVM_MEM="$SMALL" \
+    scripts/runmain.sh graft.SpillGate "$SF" 2>/dev/null | tail -1)
 echo "[spillgate] B: $B" >&2
 
 python3 - "$A" "$B" <<'EOF'

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline query subset (shapes matching
   * BASELINE.md q1..q9) against SPARK_GRAFT_SF_DIR and prints one JSON
   * line. Full-registry correctness lives in Verify; bench stays on the
@@ -34,15 +32,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
+    val spark = GraftSession.mainBuilder(4)
       .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val tally = org.apache.spark.sql.graft.ListenerBridge.register(spark.sparkContext)
@@ -78,7 +69,7 @@ object Bench {
     val diag = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def canary(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, spark.sparkContext.defaultParallelism)
         .selectExpr("sum(id % 97) AS s").collect()
       (System.nanoTime() - t0) / 1e9
     }

@@ -22,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   * manager: storage-pool pressure evicts/steals from the unified
   * execution pool, so LATE queries inherit a degraded JVM and their
   * timings stop meaning anything. This sweep puts every drive loop
-  * (Verify, Tripwire, Bench, Probe) back into a defined JVM state after
-  * each materialization, and its counts double as leak ACCOUNTING:
+  * (Verify, Tripwire, Bench, Cli probe) back into a defined JVM state
+  * after each materialization, and its counts double as leak ACCOUNTING:
   * Tripwire fails by name when a key outside [[persistAllowlist]]
   * leaves a plain (non-checkpoint) persisted RDD behind.
   */

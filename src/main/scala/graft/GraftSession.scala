@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The library's session entry point: one place that encodes the
-  * 100 TB posture every main in this repo (Verify, Bench, Tripwire,
-  * VerifySubset) previously duplicated, so a user of the library starts
-  * from the configuration the engine is designed and tested against.
+/** The library's session entry point: the one place that encodes the
+  * 100 TB posture. Every main in this repo ([[mainBuilder]]), the test
+  * session and the benchmark harness start from it, so a user of the
+  * library runs under the configuration the engine is designed, tested
+  * and measured against.
   *
   * What it pins and why (SURVEY.md §4.3):
   *  - the Graft extensions (vector kernels, bloom build/probe, as-of
@@ -72,6 +73,14 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
+  }
+
+  /** The session of this repo's mains: [[builder]] on `local[N]` with
+    * the UI off, N from `SPARK_GRAFT_CPUS` or else `defaultCpus`. A main
+    * adds only the confs that belong to it. */
+  def mainBuilder(defaultCpus: Int): SparkSession.Builder = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(defaultCpus)
+    builder(s"local[$cpus]").config("spark.ui.enabled", "false")
   }
 
   /** The streaming posture on top of [[builder]]: RocksDB state store —

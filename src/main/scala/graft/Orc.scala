@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Determinism helpers for oracle-checked queries (SURVEY.md §5.3).
@@ -36,6 +36,19 @@ object Orc {
   /** Epoch seconds of a timestamp — timestamps cross engines more safely
     * as BIGINT (pair with `epoch(ts)::BIGINT` in DuckDB). */
   def epochS(c: Column): Column = unix_timestamp(c)
+
+  /** Order-independent exact content hash of a result: the row count
+    * and the DECIMAL(38,0) sum of `xxhash64(to_json(struct(*)))` over
+    * all rows ("null" for no rows). Sum commutes and cannot overflow at
+    * 128 bits, and any dropped, duplicated or altered row moves it; two
+    * runs of the same code on the same input render JSON identically.
+    * One action. */
+  def contentHash(df: DataFrame): (Long, String) = {
+    val row = df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("j"))
+      .agg(count(lit(1)), sum(xxhash64(col("j")).cast("decimal(38,0)")))
+      .head()
+    (row.getLong(0), String.valueOf(row.get(1)))
+  }
 
   /** Mechanically rewrite every `round(E, n)` (literal integer scale n)
     * in a DuckDB oracle SQL text to `floor((E) * 1en + 0.5) / 1en` — the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.{DeltaChain, VersionedTable}
 
 /** Cross-PROCESS commit-arbitration gate (VERDICT r14 item 6).
@@ -28,13 +26,7 @@ object RaceGate {
   def main(args: Array[String]): Unit = {
     val cmd = args(0)
     val dir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.mainBuilder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

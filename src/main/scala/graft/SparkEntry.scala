@@ -232,6 +232,25 @@ object SparkEntry {
     oracleMaps.reduce(_ ++ _)
       .map { case (k, v) => k -> Orc.round4Sql(v) }
 
+  /** The keys of `keys` (default: the registry, in its iteration order)
+    * that a comma-separated spec selects, in that order. An entry that
+    * names a key selects exactly that key; any other entry is a prefix
+    * and selects every key it starts. An entry that matches no key, or a
+    * spec with no entries, throws (naming the entries), so a misspelled
+    * list fails before any work instead of running a partial or empty
+    * drive. */
+  def select(spec: String, keys: Seq[String] = queries.keys.toSeq): Seq[String] = {
+    val entries = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val (exact, prefixes) = entries.partition(keys.toSet)
+    val unknown = prefixes.filterNot(p => keys.exists(_.startsWith(p)))
+    if (entries.isEmpty)
+      throw new IllegalArgumentException(s"key spec '$spec' selects no key")
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"key spec names unknown key(s) or prefix(es): ${unknown.mkString(", ")}")
+    keys.filter(k => exact.contains(k) || prefixes.exists(k.startsWith))
+  }
+
   /** Headline bench subset — names and shapes match BASELINE.md. */
   def benchQueries: Seq[String] = Seq(
     "q1_scan_agg", "q2_join3", "q3_window_topk", "q4_anti_join",

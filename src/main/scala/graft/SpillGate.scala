@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Constrained-heap spill gate (VERDICT r12 item 4): every r12 bench
   * probe reported ZERO spill at 128 GiB, which means the spill paths
   * (UnsafeExternalSorter, shuffle ExternalSorter, hash-agg fallback)
@@ -16,14 +13,12 @@ import org.apache.spark.sql.functions._
   * in the constrained run: surviving memory pressure is proven, not
   * assumed, and proven to not change a single row.
   *
-  * The content hash: `count` plus the DECIMAL(38,0) exact sum of
-  * `xxhash64(to_json(struct(*)))` over all rows — order-independent
-  * (sum commutes), overflow-free (128-bit), and sensitive to any
-  * dropped/duplicated/altered row. Both runs execute identical code on
-  * identical input, so JSON rendering is bit-identical across them.
+  * The content hash is [[Orc.contentHash]]: order-independent,
+  * overflow-free, and sensitive to any dropped/duplicated/altered row.
   *
   * Usage:  runMain graft.SpillGate [sfDir]   (or java -cp ... graft.SpillGate)
-  *   SPARK_GRAFT_SPILL_KEYS   comma list, default the 4 heavy probes
+  *   SPARK_GRAFT_SPILL_KEYS   key spec ([[SparkEntry.select]]), default
+  *                            the 4 heavy probes
   *   SPARK_GRAFT_CPUS         local[N], default 8
   *   SPARK_GRAFT_FORCE_SPILL_ELEMS  when set, every external sorter /
   *     hash-agg force-spills after N in-memory elements (Spark's
@@ -38,21 +33,10 @@ object SpillGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val keys = sys.env.getOrElse("SPARK_GRAFT_SPILL_KEYS",
-      "lj2_prefix_jaccard,ls3_tfidf_topk,lpq_pq_ann,q2_join3")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val unknown = keys.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"SpillGate: unknown key(s): ${unknown.mkString(",")}")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
+    val keys = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_SPILL_KEYS",
+      "lj2_prefix_jaccard,ls3_tfidf_topk,lpq_pq_ann,q2_join3"))
+    val builder = GraftSession.mainBuilder(8)
       .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_FORCE_SPILL_ELEMS").foreach { n =>
       // core sorter threshold (SortExec / shuffle ExternalSorter /
       // UnsafeExternalSorter) plus the SQL buffered-rowarray ones
@@ -71,16 +55,9 @@ object SpillGate {
       CacheLifecycle.sweep(spark)
       tally.reset()
       val t0 = System.nanoTime()
-      val df = SparkEntry.queries(key)(spark, sfDir)
-      val row = df
-        .select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("j"))
-        .agg(count(lit(1)).as("n"),
-          sum(xxhash64(col("j")).cast("decimal(38,0)")).as("h"))
-        .collect()(0)
+      val (rows, hash) = Orc.contentHash(SparkEntry.queries(key)(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
-      val rows = row.getLong(0)
-      val hash = Option(row.get(1)).map(_.toString).getOrElse("null")
       f""""$key":{"sec":$sec%.2f,"rows":$rows,"hash":"$hash",""" +
         s""""spill_mem_mb":${tally.memSpilled.get / (1L << 20)},""" +
         s""""spill_disk_mb":${tally.diskSpilled.get / (1L << 20)}}"""

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Runtime-slope decision shared by [[Tripwire]] and its negative
   * control (ScaleSlopeSpec). A query is a slope breach when its
   * large-SF wall exceeds `cap ×` its small-SF wall, with the small
@@ -33,7 +31,8 @@ object SlopeGate {
   * Usage: runMain graft.Tripwire [sfDir]   (default /root/testdata/sf0.001)
   *   SPARK_GRAFT_TRIPWIRE_BUDGET_S  per-query ceiling, default 30
   *
-  * SPARK_GRAFT_ONLY=k1,k2 restricts the drive to the named keys — the
+  * SPARK_GRAFT_ONLY=k1,prefix2 restricts the drive to the keys
+  * [[SparkEntry.select]] resolves (exit 1 if an entry matches none) — the
   * decade-3 run (sf0.1 → the generated target/sf1) uses this to time
   * the headline + heavy-probe subset under a long budget without
   * paying an hours-long full-registry drive at 6 M rows.
@@ -65,68 +64,31 @@ object Tripwire {
       .map(_.toLong).getOrElse(120L)
     val slopeCap = sys.env.get("SPARK_GRAFT_SLOPE_CAP")
       .map(_.toDouble).getOrElse(SlopeGate.DefaultCap)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val queries = SparkEntry.queries
+    // a misspelled SPARK_GRAFT_ONLY fails here, before any driving, so
+    // the slope gate cannot record a vacuous "PASS: 0 queries"
+    val selected = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.select(_))
+      .getOrElse(queries.keys.toSeq)
+    val spark = GraftSession.mainBuilder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     var slowest = ("", 0.0)
-    // SPARK_GRAFT_ONLY key validation (ADVICE r12, medium): a misspelled
-    // key list used to silently filter to an empty/partial set and let
-    // the slope gate record a vacuous "PASS: 0 queries". Unknown names
-    // or an empty selection now abort BEFORE any driving, exit 1.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.contains)
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[tripwire] FATAL: SPARK_GRAFT_ONLY names unknown key(s): " +
-            unknown.toSeq.sorted.mkString(", "))
-        spark.stop(); sys.exit(1)
-      }
-      if (names.isEmpty) {
-        System.err.println("[tripwire] FATAL: SPARK_GRAFT_ONLY selects zero keys")
-        spark.stop(); sys.exit(1)
-      }
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
     // SAME-SESSION double-drive mode (VERDICT r13 item 5): the standing
     // determinism gate drives the registry in two FRESH JVMs — it can
     // never see the class of bug where a key corrupts ITS OWN second
     // run through session residue (the r13 x33 temp-view leak was
     // caught only by accident at decade-3). With
     // SPARK_GRAFT_DOUBLE_DRIVE=1 every selected key runs twice in THIS
-    // session and the two order-independent content hashes (count +
-    // exact decimal sum of per-row xxhash64 over the JSON rendering —
-    // the SpillGate hash) must match; a mismatch, or a second run that
-    // errors where the first succeeded, fails the gate BY NAME.
+    // session and the two order-independent content hashes
+    // ([[Orc.contentHash]], as in SpillGate) must match; a mismatch, or
+    // a second run that errors where the first succeeded, fails the
+    // gate BY NAME.
     val doubleDrive = sys.env.get("SPARK_GRAFT_DOUBLE_DRIVE").contains("1")
     def contentHash(name: String, slot: String): Either[String, (Long, String)] = {
       var h: Option[(Long, String)] = None
       QueryGuard.run(sc, s"dd-$slot-$name", Some(budgetS)) {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val row = df.select(org.apache.spark.sql.functions.to_json(
-            org.apache.spark.sql.functions.struct(
-              df.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*))
-            .as("j"))
-          .agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)),
-            org.apache.spark.sql.functions.sum(
-              org.apache.spark.sql.functions.xxhash64(
-                org.apache.spark.sql.functions.col("j")).cast("decimal(38,0)")))
-          .collect()(0)
-        h = Some((row.getLong(0), String.valueOf(row.get(1))))
+        h = Some(Orc.contentHash(queries(name)(spark, sfDir)))
       } match {
         case QueryGuard.Ok        => Right(h.get)
         case QueryGuard.Timeout   => Left(s"TIMEOUT > ${budgetS}s")
@@ -134,7 +96,7 @@ object Tripwire {
       }
     }
     if (doubleDrive) {
-      selected.foreach { case (name, _) =>
+      selected.foreach { name =>
         val t0 = System.nanoTime()
         val first = contentHash(name, "a")
         CacheLifecycle.sweep(spark) // defined state, but SAME session — no restart
@@ -170,7 +132,8 @@ object Tripwire {
         s"same-session, all hash-identical")
       return
     }
-    selected.foreach { case (name, fn) =>
+    selected.foreach { name =>
+      val fn = queries(name)
       val t0 = System.nanoTime()
       def wall = (System.nanoTime() - t0) / 1e9
       QueryGuard.run(sc, s"tripwire-$name", Some(budgetS)) {

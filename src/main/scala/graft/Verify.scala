@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -19,26 +18,29 @@ import java.nio.file.{Files, Paths}
   *  - a timed-out or failed query's output directory is deleted, so the
   *    driver sees a MISSING result (scored as absent) instead of a
   *    partially-written parquet dir it would score as WRONG.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir>
+  *   SPARK_GRAFT_ONLY=k1,prefix2  drive only the keys
+  *     [[SparkEntry.select]] resolves (and write only their slice of
+  *     oracle_sql.json), so a new query family checks with
+  *     `scripts/check.py` in seconds; an entry that matches no key
+  *     exits 1 before a session is built.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // default budget 120 s/query: the watchdog must engage on driver
     // runs without relying on the driver to export the env var (round-7
     // verdict #8); slowest r07 query was <10 s at sf0.01, so 120 s only
     // fires on a genuine wedge.
     val budgetS = sys.env.get("SPARK_GRAFT_QUERY_BUDGET_S")
       .map(_.toLong).orElse(Some(120L)).filter(_ > 0)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val queries = SparkEntry.queries
+    val selected = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.select(_))
+      .getOrElse(queries.keys.toSeq)
+    // local[4] by default: a double sum depends on its summation order,
+    // so the oracle compare is pinned to four partitions
+    val spark = GraftSession.mainBuilder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -54,15 +56,12 @@ object Verify {
       case c => c.toString
     } + "\""
     // Oracle map FIRST: a hung/failed query later must not erase it.
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => selected.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val sc = spark.sparkContext
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    selected.foreach { name =>
+      val fn = queries(name)
       val t0 = System.nanoTime()
       def wall = (System.nanoTime() - t0) / 1e9
       QueryGuard.run(sc, s"verify-$name", budgetS) {

@@ -561,13 +561,15 @@ object DeltaChain {
     * preimage payloads (a delete row's stored payload is whatever the
     * writer happened to send; the state is what the table actually
     * held), and a stored delete of an absent key emits nothing — the
-    * replay no-op surfaces as a CDF no-op, consistently. */
+    * replay no-op surfaces as a CDF no-op, consistently. Both sides
+    * take the commit's own shape, so a schema-change commit (an empty
+    * change record) reads as empty under its new columns. */
   def changesAt(spark: SparkSession, baseDir: String, version: Int): DataFrame = {
     require(version >= 2 && versions(baseDir).contains(version),
       s"DeltaChain.changesAt: need a committed version >= 2, got $version " +
         s"of ${versions(baseDir).mkString("[", ",", "]")}")
     val m = meta(baseDir)
-    val prev = readAsOf(spark, baseDir, version - 1)
+    val prev = projectTo(readAsOf(spark, baseDir, version - 1), m, version - 1, version)
     val dataCols = prev.columns.toSeq
     val old = prev.select(dataCols.map(c => col(c).as(s"__old_$c")): _*)
       .withColumn("__graft_in_prev", lit(true))

@@ -196,6 +196,13 @@ class DeltaSidecarSpec extends SparkSpec {
     DeltaChain.dropColumn(spark, root, "a")                                         // v7
     DeltaChain.commitDelta(spark, root, Seq((4L, 401L, 9L)).toDF("k", "b2", "c"))   // v8, cp
     assert(DeltaChain.read(spark, root).columns.toSeq === Seq("k", "b2", "c"))
-    assertSameReads(root, legacyCopy(root))(allReads(8, Seq(4, 8)))
+    // a rename or drop commit changes no row and reads in its own shape
+    Seq(5, 7).foreach { v =>
+      val feed = DeltaChain.changesAt(spark, root, v)
+      assert(feed.columns.toSeq ===
+        DeltaChain.readAsOf(spark, root, v).columns.toSeq :+ "_change_type")
+      assert(feed.isEmpty, s"changesAt($v)")
+    }
+    assertSameReads(root, legacyCopy(root))(allReads(8, 2 to 8))
   }
 }

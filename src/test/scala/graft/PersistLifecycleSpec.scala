@@ -2,8 +2,8 @@ package graft
 
 /** Persist/localCheckpoint lifecycle audit (VERDICT r11 item 2).
   *
-  * Every drive loop (Verify/Tripwire/Bench/Probe) now sweeps the block
-  * manager between queries via [[CacheLifecycle.sweep]]. This spec
+  * Every drive loop (Verify/Tripwire/Bench/Cli probe) now sweeps the
+  * block manager between queries via [[CacheLifecycle.sweep]]. This spec
   * pins the CONTRACT that sweep relies on:
   *
   *  - the keys on [[CacheLifecycle.persistAllowlist]] really do leave

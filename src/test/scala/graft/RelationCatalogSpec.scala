@@ -6,7 +6,6 @@ import scala.reflect.io.Directory
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions._
 
 /** Laws of the per-session relation catalog behind [[Tables.t]]: a read
   * is served from the catalog only while the path's files are unchanged,
@@ -20,15 +19,6 @@ class RelationCatalogSpec extends SparkSpec {
     df.queryExecution.analyzed.collectFirst {
       case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
     }.get
-
-  /** Order-independent content hash: row count and the exact sum of the
-    * per-row xxhash64 of each row's JSON rendering. */
-  private def contentHash(df: DataFrame): (Long, String) = {
-    val row = df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("j"))
-      .agg(count(lit(1)), sum(xxhash64(col("j")).cast("decimal(38,0)")))
-      .head()
-    (row.getLong(0), String.valueOf(row.get(1)))
-  }
 
   /** Writes `df` as ONE parquet file at `dir/name.parquet`, replacing
     * whatever file is there, the way the fixtures are laid out. */
@@ -68,7 +58,7 @@ class RelationCatalogSpec extends SparkSpec {
       val hit = Tables.t(spark, sfDir, name)
       val plain = spark.read.parquet(s"$sfDir/$name.parquet")
       assert(hit.schema == plain.schema, name)
-      assert(contentHash(hit) == contentHash(plain), name)
+      assert(Orc.contentHash(hit) == Orc.contentHash(plain), name)
     }
   }
 
