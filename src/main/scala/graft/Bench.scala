@@ -160,12 +160,17 @@ object Bench {
     // runs. Inner walls are bracketed per query so the generation cost
     // (untimed setup in spirit, timed here for honesty) is separable
     // from the measurements.
+    // The generated tables' row counts are read in the untimed work
+    // thunk, after the body, so their count jobs stay out of the wall.
     var scaleDiag: Seq[(String, Long)] = Seq.empty
-    val scaleSec = probe("scaleup", () => scaleDiag) {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bench_scale_${java.util.UUID.randomUUID().toString.take(8)}")
-      graft.QueryGuard.deleteRecOnExit(root)
-      val dir = root.getAbsolutePath
+    var scaleDir = ""
+    def scaleWork(): Seq[(String, Long)] = scaleDiag ++ Seq(
+      "li_rows" -> spark.read.parquet(s"$scaleDir/lineitem.parquet").count(),
+      "ev_rows" -> spark.read.parquet(s"$scaleDir/events.parquet").count(),
+      "emb_rows" -> spark.read.parquet(s"$scaleDir/embeddings.parquet").count())
+    val scaleSec = probe("scaleup", () => scaleWork()) {
+      val dir = graft.queries.Shared.scratch("bench_scale").getAbsolutePath
+      scaleDir = dir
       // 30 copies, not 10: at 10× (6M lineitem rows) the per-task work
       // is still smaller than task-scheduling overhead and the
       // 8-vs-32-core ratio reads ≈1 for the wrong reason (measured this
@@ -224,10 +229,7 @@ object Bench {
         "q6_ms" -> timed("q6_event_window_json"),
         "q7_ms" -> timed("q7_sort_limit"),
         "q9_ms" -> timedMin2("q9_cosine_selfjoin"),
-        "files_per_table" -> copies.toLong,
-        "li_rows" -> spark.read.parquet(s"$dir/lineitem.parquet").count(),
-        "ev_rows" -> spark.read.parquet(s"$dir/events.parquet").count(),
-        "emb_rows" -> spark.read.parquet(s"$dir/embeddings.parquet").count())
+        "files_per_table" -> copies.toLong)
     }
 
     // Probe: T6 stateful streaming against the RocksDB state store at
@@ -386,10 +388,7 @@ object Bench {
     // round, the same discipline as every other probe.
     var lakeDiag: Seq[(String, Long)] = Seq.empty
     val lakehouseSec = probe("lakehouse", () => lakeDiag) {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bench_lake_${java.util.UUID.randomUUID().toString.take(8)}")
-      graft.QueryGuard.deleteRecOnExit(root)
-      val dir = root.getAbsolutePath
+      val dir = graft.queries.Shared.scratch("bench_lake").getAbsolutePath
       val base = graft.Tables.orders(spark, sfDir)
         .select(org.apache.spark.sql.functions.col("o_orderkey"),
           org.apache.spark.sql.functions.expr(
@@ -422,10 +421,7 @@ object Bench {
     // rows, and BOTH inner walls (the probe's own sec is the total).
     var cdfDiag: Seq[(String, Long)] = Seq.empty
     val cdfRangeSec = probe("cdf_range", () => cdfDiag) {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bench_cdf_${java.util.UUID.randomUUID().toString.take(8)}")
-      graft.QueryGuard.deleteRecOnExit(root)
-      val dir = root.getAbsolutePath
+      val dir = graft.queries.Shared.scratch("bench_cdf").getAbsolutePath
       val base = graft.Tables.orders(spark, sfDir)
         .select(org.apache.spark.sql.functions.col("o_orderkey"),
           org.apache.spark.sql.functions.expr(
@@ -468,10 +464,7 @@ object Bench {
     // jump at unchanged diff rows.
     var restoreDiag: Seq[(String, Long)] = Seq.empty
     val restoreSec = probe("restore", () => restoreDiag) {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bench_restore_${java.util.UUID.randomUUID().toString.take(8)}")
-      graft.QueryGuard.deleteRecOnExit(root)
-      val dir = root.getAbsolutePath
+      val dir = graft.queries.Shared.scratch("bench_restore").getAbsolutePath
       val base = graft.Tables.orders(spark, sfDir)
         .select(org.apache.spark.sql.functions.col("o_orderkey"),
           org.apache.spark.sql.functions.expr(
@@ -492,13 +485,10 @@ object Bench {
       // round over round instead of an assumption.
       val scanBytes = graft.operators.DeltaChain.restoreScanBytes(dir, 2)
       val v = graft.operators.DeltaChain.restore(spark, dir, 2)
-      val d = new java.io.File(s"$dir/d$v")
-      val files = Option(d.listFiles())
-        .map(_.filter(f => f.isFile && f.getName.endsWith(".parquet")))
-        .getOrElse(Array.empty[java.io.File])
+      val d = s"$dir/d$v"
       restoreDiag = Seq("base_rows" -> base.count(),
-        "restore_delta_rows" -> spark.read.parquet(d.getAbsolutePath).count(),
-        "restore_delta_bytes" -> files.map(_.length()).sum,
+        "restore_delta_rows" -> spark.read.parquet(d).count(),
+        "restore_delta_bytes" -> graft.operators.TableLog.census(d).bytes,
         "restore_scan_bytes" -> scanBytes)
     }
     val diagJson = diag.map { case (k, v) => s"\"$k\":$v" }

@@ -87,14 +87,13 @@ object QueryGuard {
   /** Build on the guarded worker thread; apply inside each `.par` task. */
   def withCallerJobGroup(sc: SparkContext): JobGroupRunner = new JobGroupRunner(sc)
 
-  /** Recursive delete — used to turn a failed/timed-out query's
-    * partially-written output directory into a MISSING result rather
-    * than a corrupt one the driver's DuckDB compare would score WRONG. */
-  def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-    f.delete()
-  }
+  /** Recursive delete ([[graft.operators.TableLog.deleteRecursively]])
+    * — used to turn a failed/timed-out query's partially-written output
+    * directory into a MISSING result rather than a corrupt one the
+    * driver's DuckDB compare would score WRONG. */
+  def deleteRec(f: java.io.File): Unit =
+    try graft.operators.TableLog.deleteRecursively(f.toPath)
+    catch { case _: java.io.IOException => () } // best effort: a straggler must not stop a drive
 
   /** JVM-exit cleanup for a POPULATED scratch directory. `deleteOnExit`
     * cannot do this — `File.delete` refuses a non-empty directory, so

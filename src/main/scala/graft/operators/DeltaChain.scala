@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * {{{
   *   baseDir/
   *     _graft_manifest     committed versions, ascending; ATOMIC_MOVE-
-  *                         published per commit (the VersionedTable
-  *                         publish-by-rename discipline, shared code)
+  *                         published per commit ([[TableLog]]'s
+  *                         publish-by-rename, shared with VersionedTable)
   *     _graft_delta_meta   keys + checkpoint cadence, written once at
   *                         create (layout facts a reader must know)
   *     c1/                 checkpoint parquet: the FULL state at v1
@@ -47,10 +47,11 @@ import org.apache.spark.sql.functions._
   * only a dir written before sidecars existed is read by inference.
   *
   * Commit protocol: write `d{n+1}` (and `c{n+1}` when the cadence is
-  * due) COMPLETELY, then publish the manifest — a crash mid-commit
-  * leaves orphan dirs no manifest references, never a torn read
-  * (identical guarantee to VersionedTable; the manifest rename is the
-  * single visibility point for BOTH dirs of a checkpoint commit).
+  * due) COMPLETELY, then publish the manifest, then append any meta
+  * line — every writer lands through [[landCommit]], so a crash
+  * mid-commit leaves orphan dirs no manifest references, never a torn
+  * read (identical guarantee to VersionedTable; the manifest rename is
+  * the single visibility point for BOTH dirs of a checkpoint commit).
   *
   * Keyed contract: this storage mode REQUIRES a primary key (declared
   * at create) — a delta row replaces or deletes BY KEY, which is what
@@ -187,13 +188,6 @@ object DeltaChain {
       !laterAdd && !laterDrop
     }
 
-  private def rewriteMeta(baseDir: String, content: String): Unit = {
-    val tmp = Paths.get(baseDir, s".$MetaName.tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, metaPath(baseDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Project a frame STORED at version `storedV` to the logical shape
     * at `upTo`: fold every schema event in (storedV, upTo] in version
     * order — an add backfills `defaultSql` over the frame's own
@@ -267,8 +261,8 @@ object DeltaChain {
   private def readDir(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(storedSchema(spark, dir)).parquet(dir)
 
-  def versions(baseDir: String): Seq[Int] = VersionedTable.versions(baseDir)
-  def latestVersion(baseDir: String): Int = VersionedTable.latestVersion(baseDir)
+  def versions(baseDir: String): Seq[Int] = TableLog.versions(baseDir)
+  def latestVersion(baseDir: String): Int = TableLog.latestVersion(baseDir)
 
   private def checkpointDir(baseDir: String, v: Int) = s"$baseDir/c$v"
   private def deltaDir(baseDir: String, v: Int) = s"$baseDir/d$v"
@@ -311,7 +305,7 @@ object DeltaChain {
     Files.write(metaPath(baseDir),
       s"keys=${keys.mkString(",")};every=$checkpointEvery$partsLine"
         .getBytes(StandardCharsets.UTF_8))
-    VersionedTable.publishManifest(baseDir, Seq(1))
+    TableLog.publish(baseDir, Seq(1))
     1
   }
 
@@ -331,16 +325,11 @@ object DeltaChain {
     // file carrying the full schema as the readable sentinel; the dir
     // is immutable per version, so the mixed layout never accretes
     // (ADVICE r15).
-    if (parts.nonEmpty && !hasParquetUnder(new java.io.File(dir)))
+    if (parts.nonEmpty && TableLog.census(dir).files == 0)
       df.limit(0).coalesce(1).write.mode("append").parquet(dir)
     Files.write(Paths.get(dir, SchemaSidecar),
       df.schema.json.getBytes(StandardCharsets.UTF_8))
   }
-
-  private def hasParquetUnder(f: java.io.File): Boolean =
-    if (f.isDirectory)
-      Option(f.listFiles()).exists(_.exists(hasParquetUnder))
-    else f.getName.endsWith(".parquet")
 
   /** Commit a change batch as the next version. `delta` carries every
     * table column plus, optionally, a boolean `deleteCol`: true rows
@@ -358,39 +347,148 @@ object DeltaChain {
       spark: SparkSession,
       baseDir: String,
       delta: DataFrame,
-      deleteCol: Option[String] = None): Int = {
-    val m = meta(baseDir)
-    val current = latestVersion(baseDir)
-    require(current > 0, s"DeltaChain.commitDelta: $baseDir has no v1 — create() first")
-    val lastCp = diskCheckpoints(baseDir).max // disk view: see truncate
-    // the authoritative column list = latest checkpoint's stored schema
-    // plus metadata-only additions — one sidecar read, never a replay
+      deleteCol: Option[String] = None): Int =
+    commitStaged(spark, baseDir, delta, deleteCol, "DeltaChain.commitDelta", None)
+
+  /** [[commitDelta]]'s body, plus the `kind` line a [[restore]] records:
+    * stage, validate, then land with the checkpoint when the cadence
+    * is due — the authoritative column list is the latest checkpoint's
+    * stored schema plus metadata-only events (one sidecar read, never a
+    * replay). */
+  private def commitStaged(
+      spark: SparkSession,
+      baseDir: String,
+      delta: DataFrame,
+      deleteCol: Option[String],
+      who: String,
+      kind: Option[String]): Int = {
+    val (m, current) = head(baseDir, who)
     val tableCols = tableColsAt(spark, baseDir, m, current)
-    val next = current + 1
-    // STAGE ONCE, validate from the staged files, atomically rename into
-    // place: the caller's delta lineage is computed exactly once (the
-    // old validate-then-write order ran it twice — once for the
-    // validation aggregate, once for the write). A failed validation
-    // deletes the staging dir and throws with nothing committed; a
-    // crash in between leaves only a janitor-swept `.stage_d_*` dir.
-    val shaped = shape(delta, tableCols, deleteCol, "DeltaChain.commitDelta")
+    val staging = stage(spark, baseDir, delta, deleteCol, m.keys, tableCols,
+      activeConstraints(m), who)
+    landStaged(spark, baseDir, m, tableCols, current + 1, staging,
+      kind.map("kind" -> _))
+  }
+
+  /** STAGE ONCE, validate from the staged files: the caller's delta
+    * lineage is computed exactly once (a validate-then-write order ran
+    * it twice — once for the validation aggregate, once for the
+    * write). A failed validation deletes the staging dir and throws
+    * with nothing committed; a crash in between leaves only a
+    * janitor-swept `.stage_d_*` dir. Returns the staging dir. */
+  private def stage(
+      spark: SparkSession,
+      baseDir: String,
+      delta: DataFrame,
+      deleteCol: Option[String],
+      keys: Seq[String],
+      tableCols: Seq[String],
+      constraints: Seq[Constraint],
+      who: String): Path = {
+    val shaped = shape(delta, tableCols, deleteCol, who)
     val staging = Paths.get(baseDir,
       s".stage_d_${java.util.UUID.randomUUID().toString.take(12)}")
     writeDir(shaped, staging.toString)
-    try validateStaged(spark, staging.toString, m.keys,
-      "DeltaChain.commitDelta", activeConstraints(m))
-    catch { case t: Throwable => deleteStagingRecursively(staging); throw t }
-    Files.move(staging, Paths.get(deltaDir(baseDir, next)),
-      StandardCopyOption.ATOMIC_MOVE)
-    if (next - lastCp >= m.checkpointEvery) {
-      // materialize by replaying from the last checkpoint INCLUDING the
-      // just-written delta dir (readable before publish — the manifest,
-      // not dir existence, is the reader-visibility point)
-      writeDir(replay(spark, baseDir, lastCp, next, tableCols, m.keys),
+    try validateStaged(spark, staging.toString, keys, who, constraints)
+    catch { case t: Throwable => TableLog.deleteRecursively(staging); throw t }
+    staging
+  }
+
+  /** Land a staged delta as version `next`: atomically rename it into
+    * `d{next}`, plus the checkpoint when the cadence is due. */
+  private def landStaged(
+      spark: SparkSession,
+      baseDir: String,
+      m: Meta,
+      tableCols: Seq[String],
+      next: Int,
+      staging: Path,
+      event: Option[(String, String)]): Int = {
+    val due = next - diskCheckpoints(baseDir).max >= m.checkpointEvery
+    landCommit(spark, baseDir, m, tableCols, next,
+      dir => Files.move(staging, Paths.get(dir), StandardCopyOption.ATOMIC_MOVE),
+      if (due) Some(identity) else None, event)
+  }
+
+  /** The one order every commit after [[create]] lands in — a
+    * crash-consistency rule:
+    *  1. the change record `d{next}`, placed by `placeRecord`;
+    *  2. when `layout` is given, the checkpoint `c{next}`: the replay
+    *     from the last checkpoint through `layout` (the just-placed
+    *     record is readable before the publish — the manifest, not dir
+    *     existence, is the reader-visibility point);
+    *  3. the manifest publish;
+    *  4. the meta line `event` (tag, payload), if any.
+    * Manifest first, meta line second (ADVICE r14): the reverse order
+    * left a phantom addcol entry bound to an uncommitted version on a
+    * crash between the two writes — after orphan-dir cleanup the next
+    * ordinary commit reused that version number and the phantom column
+    * sprang into existence for every reader. With this order a crash
+    * between the writes leaves v{next} committed without its line: a
+    * schema change becomes an empty no-op commit (re-running lands it
+    * at the next version), an optimize or restore is labeled `delta` —
+    * an audit-label blemish, never a data defect; meta()'s
+    * committed-version filter is the second line of defense. Kinds are
+    * recorded AT COMMIT (ADVICE r15): history() never infers
+    * "optimize" from the empty-delta+checkpoint artifact shape, which a
+    * zero-row data delta landing on the checkpoint cadence shares. */
+  private def landCommit(
+      spark: SparkSession,
+      baseDir: String,
+      m: Meta,
+      tableCols: Seq[String],
+      next: Int,
+      placeRecord: String => Unit,
+      layout: Option[DataFrame => DataFrame],
+      event: Option[(String, String)]): Int = {
+    val lastCp = diskCheckpoints(baseDir).max // disk view: see truncate
+    placeRecord(deltaDir(baseDir, next))
+    layout.foreach { f =>
+      writeDir(f(replay(spark, baseDir, m, lastCp, next, tableCols)),
         checkpointDir(baseDir, next), m.partitionCols)
     }
-    VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
+    TableLog.publishVersion(baseDir, next)
+    event.foreach { case (tag, payload) =>
+      val raw = new String(Files.readAllBytes(metaPath(baseDir)),
+        StandardCharsets.UTF_8)
+      TableLog.replaceAtomically(metaPath(baseDir),
+        raw.stripSuffix("\n") + s"\n$tag\t$next\t$payload\n")
+    }
     next
+  }
+
+  /** Commit version `current + 1` with an EMPTY change record: zero
+    * rows carrying exactly `recordCols` + `_op`, shaped from the anchor
+    * checkpoint through `transform` — the schema-bearing `d{v}` every
+    * metadata-only commit writes (keeps the every-version-has-d{v}
+    * replay/changelog invariant and makes the commit changelog-neutral).
+    * `layout` forces a checkpoint (optimize). */
+  private def commitEmpty(
+      spark: SparkSession,
+      baseDir: String,
+      m: Meta,
+      current: Int,
+      recordCols: Seq[String],
+      event: (String, String),
+      transform: DataFrame => DataFrame = identity,
+      layout: Option[DataFrame => DataFrame] = None): Int = {
+    val cp = diskCheckpoints(baseDir).max
+    landCommit(spark, baseDir, m, recordCols, current + 1,
+      dir => writeDir(
+        transform(projectTo(readDir(spark, checkpointDir(baseDir, cp)), m, cp, current)
+            .where(lit(false)))
+          .select(recordCols.map(col) :+ lit("U").as(OpCol): _*)
+          .coalesce(1),
+        dir),
+      layout, Some(event))
+  }
+
+  /** (meta, head version) of an existing chain, for the writer `who`. */
+  private def head(baseDir: String, who: String): (Meta, Int) = {
+    val m = meta(baseDir)
+    val current = latestVersion(baseDir)
+    require(current > 0, s"$who: $baseDir has no v1 — create() first")
+    (m, current)
   }
 
   /** Shape a caller delta to (table columns + `_op`) — the PLAN-TIME
@@ -469,30 +567,54 @@ object DeltaChain {
     }
   }
 
-  /** Checkpoint `fromCp` + deltas (fromCp, to] → the exact state at
-    * `to`: tag the checkpoint seq=fromCp op=I and each delta with its
-    * version as seq, then one [[Upsert.applyCdc]] window pass by key
-    * keeps the last write per key and drops deleted keys. ONE shuffle,
-    * chain length only widens the union — the lp26 fold. */
-  private def replay(
+  /** The tagged record stream every replay reads: checkpoint `cp`
+    * (`_op` = I) ∪ every delta in (cp, to] (its stored `_op`), each
+    * projected to version `to`'s shape and `tableCols` and tagged
+    * `_seq` = the version it was stored at. */
+  private def records(
       spark: SparkSession,
       baseDir: String,
-      fromCp: Int,
+      m: Meta,
+      cp: Int,
       to: Int,
-      tableCols: Seq[String],
-      keys: Seq[String]): DataFrame = {
-    val m = meta(baseDir)
-    val cp = projectTo(readDir(spark, checkpointDir(baseDir, fromCp)), m, fromCp, to)
+      tableCols: Seq[String]): DataFrame = {
+    val base = projectTo(readDir(spark, checkpointDir(baseDir, cp)), m, cp, to)
       .select(tableCols.map(col) :+ lit("I").as(OpCol): _*)
-      .withColumn("_seq", lit(fromCp))
-    val deltas = ((fromCp + 1) to to).map { v =>
+      .withColumn("_seq", lit(cp))
+    ((cp + 1) to to).map { v =>
       projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, to)
         .select(tableCols.map(col) :+ col(OpCol): _*)
         .withColumn("_seq", lit(v))
-    }
-    val all = deltas.foldLeft(cp)(_.unionByName(_))
-    Upsert.applyCdc(all, keys, "_seq", OpCol).select(tableCols.map(col): _*)
+    }.foldLeft(base)(_.unionByName(_))
   }
+
+  /** The distinct keys the deltas in (from, to] touch, projected to
+    * version `to`. */
+  private def touchedKeys(
+      spark: SparkSession,
+      baseDir: String,
+      m: Meta,
+      from: Int,
+      to: Int): DataFrame =
+    ((from + 1) to to).map { v =>
+      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, to)
+        .select(m.keys.map(col): _*)
+    }.reduce(_.unionByName(_)).distinct()
+
+  /** Checkpoint `fromCp` + deltas (fromCp, to] → the exact state at
+    * `to`: one [[Upsert.applyCdc]] window pass by key over the
+    * [[records]] stream keeps the last write per key and drops deleted
+    * keys. ONE shuffle, chain length only widens the union — the lp26
+    * fold. */
+  private def replay(
+      spark: SparkSession,
+      baseDir: String,
+      m: Meta,
+      fromCp: Int,
+      to: Int,
+      tableCols: Seq[String]): DataFrame =
+    Upsert.applyCdc(records(spark, baseDir, m, fromCp, to, tableCols),
+      m.keys, "_seq", OpCol).select(tableCols.map(col): _*)
 
   /** Time travel: nearest checkpoint at-or-below `version` + replay.
     * Hash-identical to a full snapshot of the same chain (the q64
@@ -508,8 +630,7 @@ object DeltaChain {
       // may outlive its manifest entry (see [[truncate]])
       val cp = diskCheckpoints(baseDir).filter(_ <= version).max
       val m = meta(baseDir)
-      replay(spark, baseDir, cp, version,
-        tableColsAt(spark, baseDir, m, version), m.keys)
+      replay(spark, baseDir, m, cp, version, tableColsAt(spark, baseDir, m, version))
     }
   }
 
@@ -611,53 +732,10 @@ object DeltaChain {
     * the chain holds; a production scheduler runs it per partition).
     * Returns the new version. */
   def optimize(spark: SparkSession, baseDir: String, numFiles: Int = 1): Int = {
-    val m = meta(baseDir)
-    val current = latestVersion(baseDir)
-    require(current > 0, s"DeltaChain.optimize: $baseDir has no v1 — create() first")
+    val (m, current) = head(baseDir, "DeltaChain.optimize")
     require(numFiles >= 1, "DeltaChain.optimize: numFiles >= 1")
-    val lastCp = diskCheckpoints(baseDir).max
-    val tableCols = tableColsAt(spark, baseDir, m, current)
-    val next = current + 1
-    // the empty change record keeps the every-version-has-d{v}
-    // invariant and makes the optimize commit changelog-neutral
-    writeEmptyChangeRecord(spark, baseDir, m, current, tableCols, next)
-    writeDir(
-      replay(spark, baseDir, lastCp, next, tableCols, m.keys)
-        .coalesce(numFiles),
-      checkpointDir(baseDir, next), m.partitionCols)
-    VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
-    // kind recorded AT COMMIT, manifest-first (ADVICE r15): history()
-    // must never have to infer "optimize" from the empty-delta+
-    // checkpoint artifact shape — a legitimate zero-row data delta
-    // landing on the checkpoint cadence has the same artifacts
-    appendMetaLine(baseDir, s"kind\t$next\toptimize")
-    next
-  }
-
-  /** A zero-row change record carrying exactly `tableCols` + `_op` —
-    * the schema-bearing `d{v}` every metadata-only commit writes
-    * (keeps the every-version-has-d{v} replay/changelog invariant). */
-  private def writeEmptyChangeRecord(
-      spark: SparkSession,
-      baseDir: String,
-      m: Meta,
-      current: Int,
-      tableCols: Seq[String],
-      next: Int,
-      transform: DataFrame => DataFrame = identity): Unit = {
-    val cp = diskCheckpoints(baseDir).max
-    writeDir(
-      transform(projectTo(readDir(spark, checkpointDir(baseDir, cp)), m, cp, current)
-          .where(lit(false)))
-        .select(tableCols.map(col) :+ lit("U").as(OpCol): _*)
-        .coalesce(1),
-      deltaDir(baseDir, next))
-  }
-
-  private def appendMetaLine(baseDir: String, line: String): Unit = {
-    val raw = new String(Files.readAllBytes(metaPath(baseDir)),
-      StandardCharsets.UTF_8)
-    rewriteMeta(baseDir, raw.stripSuffix("\n") + s"\n$line\n")
+    commitEmpty(spark, baseDir, m, current, tableColsAt(spark, baseDir, m, current),
+      "kind" -> "optimize", layout = Some(_.coalesce(numFiles)))
   }
 
   /** OPTIMIZE … ZORDER BY (x, y) for the delta form — [[optimize]]
@@ -673,24 +751,46 @@ object DeltaChain {
       xCol: String,
       yCol: String,
       numFiles: Int): Int = {
-    val m = meta(baseDir)
-    val current = latestVersion(baseDir)
-    require(current > 0,
-      s"DeltaChain.optimizeClustered: $baseDir has no v1 — create() first")
-    val lastCp = diskCheckpoints(baseDir).max
+    val (m, current) = head(baseDir, "DeltaChain.optimizeClustered")
     val tableCols = tableColsAt(spark, baseDir, m, current)
     require(Seq(xCol, yCol).forall(tableCols.contains),
       s"DeltaChain.optimizeClustered: ($xCol, $yCol) must be table columns")
-    val next = current + 1
-    writeEmptyChangeRecord(spark, baseDir, m, current, tableCols, next)
-    writeDir(
-      ZOrder.cluster(
-        replay(spark, baseDir, lastCp, next, tableCols, m.keys),
-        xCol, yCol, numFiles),
-      checkpointDir(baseDir, next), m.partitionCols)
-    VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
-    appendMetaLine(baseDir, s"kind\t$next\toptimize")
-    next
+    commitEmpty(spark, baseDir, m, current, tableCols, "kind" -> "optimize",
+      layout = Some(ZOrder.cluster(_, xCol, yCol, numFiles)))
+  }
+
+  /** Parquet bytes of the change records of versions `vs` — file
+    * listings only, no data read; the currency of [[rangePruneActive]]
+    * and [[restoreScanBytes]]. */
+  private def deltaBytes(baseDir: String, vs: Range): Long =
+    vs.map(v => TableLog.census(deltaDir(baseDir, v)).bytes).sum
+
+  /** [[changesRange]]'s touched-key-prune decision, from file metadata
+    * alone: prune only when the emission window's delta bytes are under
+    * 1/4 of the bytes the replay scans regardless (anchor checkpoint +
+    * every delta since it). Exposed to the bench so the cdf_range probe
+    * can report which arm ran next to its timing. */
+  private[graft] def rangePruneActive(
+      baseDir: String, fromVersion: Int, toVersion: Int): Boolean = {
+    val cpv = diskCheckpoints(baseDir).filter(_ <= fromVersion).max
+    val windowBytes = deltaBytes(baseDir, (fromVersion + 1) to toVersion)
+    val scanBytes = TableLog.census(checkpointDir(baseDir, cpv)).bytes +
+      deltaBytes(baseDir, (cpv + 1) to toVersion)
+    windowBytes * 4L < scanBytes
+  }
+
+  /** The bytes a [[restore]] to `toVersion` scans at the CURRENT head
+    * (anchor checkpoint + every delta since it) — file listing only, no
+    * data read. VERDICT r17 "what's wrong" #4's cost counter: restore's
+    * touched-key union re-reads history since the anchor checkpoint
+    * (bounded by checkpointEvery); this makes that cost a measured
+    * number on the restore probe instead of an assumption. Call BEFORE
+    * the restore commits, so the restoring delta itself is not counted. */
+  private[graft] def restoreScanBytes(baseDir: String, toVersion: Int): Long = {
+    val current = latestVersion(baseDir)
+    val cpv = diskCheckpoints(baseDir).filter(_ <= toVersion).max
+    TableLog.census(checkpointDir(baseDir, cpv)).bytes +
+      deltaBytes(baseDir, (cpv + 1) to current)
   }
 
   /** Batched CDF over a version RANGE in ONE replay + ONE window pass
@@ -708,43 +808,6 @@ object DeltaChain {
     * preimages, no-op deletes dropped), each row tagged
     * `_commit_version` (q66b REQUIREs the set-equivalence in-key).
     * ONE shuffle on the key; chain length only widens the union. */
-  /** Parquet bytes in one chain directory — file listing only, no data
-    * read; the currency of [[rangePruneActive]]'s guard. */
-  private def dirParquetBytes(dir: String): Long =
-    Option(new java.io.File(dir).listFiles())
-      .map(_.filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .map(_.length()).sum)
-      .getOrElse(0L)
-
-  /** [[changesRange]]'s touched-key-prune decision, from file metadata
-    * alone: prune only when the emission window's delta bytes are under
-    * 1/4 of the bytes the replay scans regardless (anchor checkpoint +
-    * every delta since it). Exposed to the bench so the cdf_range probe
-    * can report which arm ran next to its timing. */
-  private[graft] def rangePruneActive(
-      baseDir: String, fromVersion: Int, toVersion: Int): Boolean = {
-    val cpv = diskCheckpoints(baseDir).filter(_ <= fromVersion).max
-    val windowBytes = ((fromVersion + 1) to toVersion)
-      .map(v => dirParquetBytes(deltaDir(baseDir, v))).sum
-    val scanBytes = dirParquetBytes(checkpointDir(baseDir, cpv)) +
-      ((cpv + 1) to toVersion).map(v => dirParquetBytes(deltaDir(baseDir, v))).sum
-    windowBytes * 4L < scanBytes
-  }
-
-  /** The bytes a [[restore]] to `toVersion` scans at the CURRENT head
-    * (anchor checkpoint + every delta since it) — file listing only, no
-    * data read. VERDICT r17 "what's wrong" #4's cost counter: restore's
-    * touched-key union re-reads history since the anchor checkpoint
-    * (bounded by checkpointEvery); this makes that cost a measured
-    * number on the restore probe instead of an assumption. Call BEFORE
-    * the restore commits, so the restoring delta itself is not counted. */
-  private[graft] def restoreScanBytes(baseDir: String, toVersion: Int): Long = {
-    val current = latestVersion(baseDir)
-    val cpv = diskCheckpoints(baseDir).filter(_ <= toVersion).max
-    dirParquetBytes(checkpointDir(baseDir, cpv)) +
-      ((cpv + 1) to current).map(v => dirParquetBytes(deltaDir(baseDir, v))).sum
-  }
-
   def changesRange(
       spark: SparkSession,
       baseDir: String,
@@ -757,14 +820,7 @@ object DeltaChain {
     val m = meta(baseDir)
     val cpv = diskCheckpoints(baseDir).filter(_ <= fromVersion).max
     val tableCols = tableColsAt(spark, baseDir, m, toVersion)
-    val cp = projectTo(readDir(spark, checkpointDir(baseDir, cpv)), m, cpv, toVersion)
-      .select(tableCols.map(col) :+ lit("I").as(OpCol): _*)
-      .withColumn("_seq", lit(cpv))
-    val all = ((cpv + 1) to toVersion).map { v =>
-      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, toVersion)
-        .select(tableCols.map(col) :+ col(OpCol): _*)
-        .withColumn("_seq", lit(v))
-    }.foldLeft(cp)(_.unionByName(_))
+    val all = records(spark, baseDir, m, cpv, toVersion, tableCols)
     // Prune to keys actually touched INSIDE the emission window before
     // the one shuffle (guide §2.3): a key with no record in
     // (fromVersion, toVersion] emits nothing and supplies a preimage to
@@ -787,12 +843,9 @@ object DeltaChain {
     // set approaches table scale and the "degrades to the shuffle we
     // were paying" arm IS the shuffle, minus the prune's own re-read.
     val joined =
-      if (rangePruneActive(baseDir, fromVersion, toVersion)) all.join(
-        ((fromVersion + 1) to toVersion).map { v =>
-          projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, toVersion)
-            .select(m.keys.map(col): _*)
-        }.reduce(_.unionByName(_)).distinct(),
-        m.keys, "left_semi")
+      if (rangePruneActive(baseDir, fromVersion, toVersion))
+        all.join(touchedKeys(spark, baseDir, m, fromVersion, toVersion),
+          m.keys, "left_semi")
       else all
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(m.keys.map(col): _*).orderBy(col("_seq"))
@@ -825,11 +878,11 @@ object DeltaChain {
         col("_c._t").as("_change_type") :+ col("_commit_version"): _*)
   }
 
-  /** Optimistic multi-writer delta commit — the
-    * [[VersionedTable.commitNextArbitrated]] claim protocol applied to
-    * the delta form: stage the shaped delta ONCE, CAS-claim the
-    * version with an atomic create-new marker, winner renames staging
-    * → `d{v}` (plus the due checkpoint) and publishes; the loser
+  /** Optimistic multi-writer delta commit — [[TableLog.arbitrate]]'s
+    * claim protocol applied to the delta form: stage the shaped delta
+    * ONCE, CAS-claim the version with an atomic create-new marker,
+    * winner renames staging → `d{v}` (plus the due checkpoint) and
+    * publishes through [[commitDelta]]'s landing path; the loser
     * KEEPS its staged files, awaits the winner's publish, and re-links
     * THE SAME staged delta against the next number — the payload is
     * version-independent, so a retry costs one rename, never a
@@ -849,8 +902,8 @@ object DeltaChain {
       deleteCol: Option[String] = None,
       maxAttempts: Int = 5,
       publishWaitMs: Long = 10000L): (Int, Int) = {
-    require(latestVersion(baseDir) > 0,
-      s"DeltaChain.commitDeltaArbitrated: $baseDir has no v1 — create() first")
+    val who = "DeltaChain.commitDeltaArbitrated"
+    require(latestVersion(baseDir) > 0, s"$who: $baseDir has no v1 — create() first")
     // STAGE ONCE (VERDICT r14 item 3): unlike the snapshot form, whose
     // compute() must re-run against each new head, the delta payload
     // is version-independent — a loser re-LINKS the same staged files
@@ -865,80 +918,23 @@ object DeltaChain {
     // staged delta without enforcing a constraint another writer
     // added concurrently), and either change re-stages (the rare
     // path).
-    var attempt = 0
-    var stagedCols: Seq[String] = Seq.empty
-    var stagedConstraints: Seq[Constraint] = Seq.empty
-    var staging: java.nio.file.Path = null
-    try {
-      while (attempt < maxAttempts) {
-        attempt += 1
-        val m = meta(baseDir)
-        val current = latestVersion(baseDir)
-        val lastCp = diskCheckpoints(baseDir).max
-        val tableCols = tableColsAt(spark, baseDir, m, current)
-        val cons = activeConstraints(m)
-        val next = current + 1
-        if (staging == null || stagedCols != tableCols ||
-            stagedConstraints != cons) {
-          if (staging != null) deleteStagingRecursively(staging)
-          // stage once, then validate from the staged files (same
-          // single-compute order as commitDelta): the delta lineage
-          // runs once; the validation aggregate reads back only keys +
-          // constraint columns + _op. The finally-block cleans staging
-          // when validation throws.
-          val shaped = shape(delta, tableCols, deleteCol,
-            "DeltaChain.commitDeltaArbitrated")
-          staging = Paths.get(baseDir,
-            s".stage_d_${java.util.UUID.randomUUID().toString.take(12)}")
-          writeDir(shaped, staging.toString)
-          validateStaged(spark, staging.toString, m.keys,
-            "DeltaChain.commitDeltaArbitrated", cons)
-          stagedCols = tableCols
-          stagedConstraints = cons
-        }
-        val marker = Paths.get(baseDir, s"_commit_v$next")
-        val won =
-          try { Files.createFile(marker); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        if (won) {
-          Files.move(staging, Paths.get(deltaDir(baseDir, next)),
-            StandardCopyOption.ATOMIC_MOVE)
-          staging = null // moved — nothing left to clean
-          if (next - lastCp >= m.checkpointEvery) {
-            writeDir(
-              replay(spark, baseDir, lastCp, next, tableCols, m.keys),
-              checkpointDir(baseDir, next), m.partitionCols)
-          }
-          VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
-          return (next, attempt)
-        }
-        // lost the claim: KEEP staging, wait for the winner's publish,
-        // and retry the same files against the next version number
-        val deadline = System.nanoTime() + publishWaitMs * 1000000L
-        while (latestVersion(baseDir) < next) {
-          if (System.nanoTime() > deadline)
-            throw new IllegalStateException(
-              s"DeltaChain.commitDeltaArbitrated: claim marker $marker exists " +
-                s"but v$next was never published within ${publishWaitMs}ms — " +
-                "orphaned claim; remove the marker after confirming the writer is gone")
-          Thread.sleep(20)
-        }
+    var staged = Option.empty[(Path, Seq[String], Seq[Constraint])]
+    try TableLog.arbitrate(baseDir, who, maxAttempts, publishWaitMs) { next =>
+      val m = meta(baseDir)
+      val tableCols = tableColsAt(spark, baseDir, m, next - 1)
+      val cons = activeConstraints(m)
+      if (!staged.exists { case (_, c, k) => c == tableCols && k == cons }) {
+        staged.foreach(st => TableLog.deleteRecursively(st._1))
+        staged = Some((stage(spark, baseDir, delta, deleteCol, m.keys, tableCols,
+          cons, who), tableCols, cons))
       }
-      throw new IllegalStateException(
-        s"DeltaChain.commitDeltaArbitrated: lost $maxAttempts consecutive " +
-          s"commit races on $baseDir")
+      val staging = staged.get._1
+      () => landStaged(spark, baseDir, m, tableCols, next, staging, None)
     } finally {
-      if (staging != null) deleteStagingRecursively(staging)
+      // a landed staging dir was renamed away: deleting it is a no-op
+      staged.foreach(st => TableLog.deleteRecursively(st._1))
     }
   }
-
-  private def deleteStagingRecursively(dir: java.nio.file.Path): Unit =
-    if (Files.exists(dir)) {
-      val walk = Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
 
   /** ALTER TABLE ADD COLUMN, metadata-only (the at-scale form of
     * [[VersionedTable.addColumn]], which rewrites the snapshot): the
@@ -958,32 +954,17 @@ object DeltaChain {
       baseDir: String,
       name: String,
       defaultSql: String): Int = {
-    val m = meta(baseDir)
-    val current = latestVersion(baseDir)
-    require(current > 0, s"DeltaChain.addColumn: $baseDir has no v1 — create() first")
+    val (m, current) = head(baseDir, "DeltaChain.addColumn")
     require(!name.contains("\t") && !defaultSql.contains("\t") &&
       !name.contains("\n") && !defaultSql.contains("\n"),
       "DeltaChain.addColumn: tabs/newlines are the metadata separators")
     val curCols = tableColsAt(spark, baseDir, m, current)
     require(!curCols.contains(name),
       s"DeltaChain.addColumn: $name already exists in $baseDir")
-    val next = current + 1
     // the empty change record: zero rows, widened schema — keeps the
     // replay/changelog invariant that every version v >= 2 has d{v}
-    writeEmptyChangeRecord(spark, baseDir, m, current, curCols :+ name, next,
-      _.withColumn(name, expr(defaultSql)))
-    // MANIFEST FIRST, metadata line second (ADVICE r14): the reverse
-    // order left a phantom addcol entry bound to an uncommitted
-    // version on a crash between the two writes — after orphan-dir
-    // cleanup the next ordinary commit reused that version number and
-    // the phantom column sprang into existence for every reader. With
-    // this ordering a crash between the writes leaves v{next}
-    // committed as an empty no-op commit WITHOUT the column (benign:
-    // re-running addColumn lands it at the next version); meta()'s
-    // committed-version filter is the second line of defense.
-    VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
-    appendMetaLine(baseDir, s"addcol\t$next\t$name\t$defaultSql")
-    next
+    commitEmpty(spark, baseDir, m, current, curCols :+ name,
+      "addcol" -> s"$name\t$defaultSql", _.withColumn(name, expr(defaultSql)))
   }
 
   /** Does `sql` reference column `name`? Word-boundary text test —
@@ -1042,22 +1023,15 @@ object DeltaChain {
     * reference the column refuse the drop loudly. Returns the new
     * version. */
   def dropColumn(spark: SparkSession, baseDir: String, name: String): Int = {
-    val m = meta(baseDir)
-    val current = latestVersion(baseDir)
-    require(current > 0, s"DeltaChain.dropColumn: $baseDir has no v1 — create() first")
+    val (m, current) = head(baseDir, "DeltaChain.dropColumn")
     require(!name.contains("\t") && !name.contains("\n"),
       "DeltaChain.dropColumn: tabs/newlines are the metadata separators")
     val curCols = tableColsAt(spark, baseDir, m, current)
     requireDroppable(m, curCols, name, "DeltaChain.dropColumn")
     require(curCols.size > 1,
       s"DeltaChain.dropColumn: $name is the only column of $baseDir")
-    val next = current + 1
-    writeEmptyChangeRecord(spark, baseDir, m, current,
-      curCols.filterNot(_ == name), next)
-    // manifest first, metadata line second — addColumn's crash ordering
-    VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
-    appendMetaLine(baseDir, s"dropcol\t$next\t$name")
-    next
+    commitEmpty(spark, baseDir, m, current, curCols.filterNot(_ == name),
+      "dropcol" -> name)
   }
 
   /** ALTER TABLE RENAME COLUMN, metadata-only: one empty change record
@@ -1069,9 +1043,7 @@ object DeltaChain {
     * must be free. Returns the new version. */
   def renameColumn(
       spark: SparkSession, baseDir: String, from: String, to: String): Int = {
-    val m = meta(baseDir)
-    val current = latestVersion(baseDir)
-    require(current > 0, s"DeltaChain.renameColumn: $baseDir has no v1 — create() first")
+    val (m, current) = head(baseDir, "DeltaChain.renameColumn")
     require(Seq(from, to).forall(n => !n.contains("\t") && !n.contains("\n")),
       "DeltaChain.renameColumn: tabs/newlines are the metadata separators")
     require(from != to, "DeltaChain.renameColumn: from and to are the same name")
@@ -1079,13 +1051,9 @@ object DeltaChain {
     requireDroppable(m, curCols, from, "DeltaChain.renameColumn")
     require(!curCols.contains(to),
       s"DeltaChain.renameColumn: $to already exists in $baseDir")
-    val next = current + 1
-    writeEmptyChangeRecord(spark, baseDir, m, current,
-      curCols.map(c => if (c == from) to else c), next,
-      _.withColumnRenamed(from, to))
-    VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
-    appendMetaLine(baseDir, s"renamecol\t$next\t$from\t$to")
-    next
+    commitEmpty(spark, baseDir, m, current,
+      curCols.map(c => if (c == from) to else c),
+      "renamecol" -> s"$from\t$to", _.withColumnRenamed(from, to))
   }
 
   /** ALTER TABLE ADD CONSTRAINT (CHECK), metadata-only: commits one
@@ -1104,10 +1072,7 @@ object DeltaChain {
       name: String,
       sql: String,
       validateExisting: Boolean = false): Int = {
-    val m = meta(baseDir)
-    val current = latestVersion(baseDir)
-    require(current > 0,
-      s"DeltaChain.addConstraint: $baseDir has no v1 — create() first")
+    val (m, current) = head(baseDir, "DeltaChain.addConstraint")
     require(!name.contains("\t") && !sql.contains("\t") &&
       !name.contains("\n") && !sql.contains("\n"),
       "DeltaChain.addConstraint: tabs/newlines are the metadata separators")
@@ -1131,12 +1096,8 @@ object DeltaChain {
         s"DeltaChain.addConstraint: $bad existing row(s) violate '$name' " +
           s"($sql) — constraint not added")
     }
-    val next = current + 1
-    val tableCols = tableColsAt(spark, baseDir, m, current)
-    writeEmptyChangeRecord(spark, baseDir, m, current, tableCols, next)
-    VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
-    appendMetaLine(baseDir, s"constraint\t$next\t$name\t$sql")
-    next
+    commitEmpty(spark, baseDir, m, current, tableColsAt(spark, baseDir, m, current),
+      "constraint" -> s"$name\t$sql")
   }
 
   /** ALTER TABLE DROP CONSTRAINT — metadata-only, same shape as
@@ -1146,18 +1107,11 @@ object DeltaChain {
       spark: SparkSession,
       baseDir: String,
       name: String): Int = {
-    val m = meta(baseDir)
-    val current = latestVersion(baseDir)
-    require(current > 0,
-      s"DeltaChain.dropConstraint: $baseDir has no v1 — create() first")
+    val (m, current) = head(baseDir, "DeltaChain.dropConstraint")
     require(activeConstraints(m).exists(_.name == name),
       s"DeltaChain.dropConstraint: no active constraint '$name' on $baseDir")
-    val next = current + 1
-    val tableCols = tableColsAt(spark, baseDir, m, current)
-    writeEmptyChangeRecord(spark, baseDir, m, current, tableCols, next)
-    VersionedTable.publishManifest(baseDir, versions(baseDir) :+ next)
-    appendMetaLine(baseDir, s"dropconstraint\t$next\t$name")
-    next
+    commitEmpty(spark, baseDir, m, current, tableColsAt(spark, baseDir, m, current),
+      "dropconstraint" -> name)
   }
 
   /** The stored change feed as a STRUCTURED STREAM — the read side
@@ -1327,7 +1281,7 @@ object DeltaChain {
   def truncate(
       baseDir: String,
       keepFrom: Int,
-      staleStagingMs: Long = 6L * 3600 * 1000): Seq[Int] = {
+      staleStagingMs: Long = TableLog.StaleStagingMs): Seq[Int] = {
     val vs = versions(baseDir)
     require(vs.contains(keepFrom),
       s"DeltaChain.truncate: keepFrom $keepFrom not a committed version of $baseDir")
@@ -1337,7 +1291,7 @@ object DeltaChain {
         "readAsOf(keepFrom) would have no replay base; checkpoint first")
     val anchorCp = anchor.max
     val keep = vs.filter(_ >= keepFrom)
-    VersionedTable.publishManifest(baseDir, keep)
+    TableLog.publish(baseDir, keep)
     // Physical reclamation follows REPLAY reachability, not manifest
     // membership (the same rule [[VersionedTable.expire]] applies to
     // DV base snapshots): every retained version replays from the
@@ -1350,21 +1304,11 @@ object DeltaChain {
     //     fuel when the anchor sits below the cut — invisible to time
     //     travel, reclaimed by a later truncate once a newer
     //     checkpoint becomes the anchor.
-    def rm(d: String): Unit = {
-      val p = Paths.get(d)
-      if (Files.exists(p)) deleteStagingRecursively(p)
-    }
     diskCheckpoints(baseDir).filter(_ < anchorCp)
-      .foreach(v => rm(checkpointDir(baseDir, v)))
+      .foreach(v => TableLog.deleteRecursively(Paths.get(checkpointDir(baseDir, v))))
     diskDeltas(baseDir).filter(_ <= anchorCp)
-      .foreach(v => rm(deltaDir(baseDir, v)))
-    // orphaned-staging sweep: only dirs past the age gate die
-    val cutoff = System.currentTimeMillis() - staleStagingMs
-    Option(new java.io.File(baseDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith(".stage_d_") &&
-        f.lastModified() < cutoff)
-      .foreach(f => rm(f.getAbsolutePath))
+      .foreach(v => TableLog.deleteRecursively(Paths.get(deltaDir(baseDir, v))))
+    TableLog.sweepStale(baseDir, ".stage_d_", staleStagingMs)
     keep
   }
 
@@ -1373,14 +1317,9 @@ object DeltaChain {
     * above it up to the cut) can legitimately outlive their manifest
     * entries, so replay resolution scans dirs, never the manifest. */
   private def diskCheckpoints(baseDir: String): Seq[Int] =
-    listNumbered(baseDir, "c")
+    TableLog.numberedDirs(baseDir, "c")
   private def diskDeltas(baseDir: String): Seq[Int] =
-    listNumbered(baseDir, "d")
-  private def listNumbered(baseDir: String, prefix: String): Seq[Int] =
-    Option(new java.io.File(baseDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.matches(s"$prefix\\d+"))
-      .map(_.getName.drop(1).toInt).toSeq.sorted
+    TableLog.numberedDirs(baseDir, "d")
 
   /** DESCRIBE HISTORY for the delta form: one row per committed
     * version — number, OPERATION KIND (create / delta / add_column /
@@ -1412,15 +1351,6 @@ object DeltaChain {
         m.constraints.map(_.version -> "add_constraint").toMap ++
         m.constraintDrops.map { case (v, _) => v -> "drop_constraint" }.toMap ++
         m.kinds
-    // recursive: a partitioned checkpoint keeps its parquet one level
-    // down inside the partition dirs
-    def dirBytes(dir: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory)
-          Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-        else if (f.getName.endsWith(".parquet")) f.length() else 0L
-      walk(new java.io.File(dir))
-    }
     val vs = versions(baseDir)
     val withDelta =
       vs.filter(v => Files.exists(Paths.get(deltaDir(baseDir, v))))
@@ -1446,7 +1376,8 @@ object DeltaChain {
           // reclaimed: only its checkpoint anchor survives
           if (!hasDelta && hasCp) "checkpoint_anchor" else "delta")
       (v, kind, counts.getOrElse(v, 0L), hasCp,
-        dirBytes(deltaDir(baseDir, v)), dirBytes(checkpointDir(baseDir, v)))
+        TableLog.census(deltaDir(baseDir, v)).bytes,
+        TableLog.census(checkpointDir(baseDir, v)).bytes)
     }.toDF("version", "kind", "delta_rows", "checkpointed",
       "delta_bytes", "checkpoint_bytes")
   }
@@ -1498,19 +1429,8 @@ object DeltaChain {
     // shuffled) once.
     val cpv = diskCheckpoints(baseDir).filter(_ <= toVersion).max
     val pay = struct(tableCols.map(col): _*)
-    val cp = projectTo(readDir(spark, checkpointDir(baseDir, cpv)), m, cpv, current)
-      .select(tableCols.map(col) :+ lit("I").as(OpCol): _*)
-      .withColumn("_seq", lit(cpv))
-    val all = ((cpv + 1) to current).map { v =>
-      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, current)
-        .select(tableCols.map(col) :+ col(OpCol): _*)
-        .withColumn("_seq", lit(v))
-    }.foldLeft(cp)(_.unionByName(_))
-    val touched = ((toVersion + 1) to current).map { v =>
-      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, current)
-        .select(m.keys.map(col): _*)
-    }.reduce(_.unionByName(_)).distinct()
-    val grouped = all.join(touched, m.keys, "left_semi")
+    val grouped = records(spark, baseDir, m, cpv, current, tableCols)
+      .join(touchedKeys(spark, baseDir, m, toVersion, current), m.keys, "left_semi")
       .groupBy(m.keys.map(col): _*)
       .agg(
         max_by(struct(col(OpCol).as("op"), pay.as("p")),
@@ -1519,16 +1439,17 @@ object DeltaChain {
           col("_seq")).as("h"))
     val oldPresent = col("o").isNotNull && col("o.op") =!= "D"
     val newPresent = col("h").isNotNull && col("h.op") =!= "D"
+    // one pass over the aggregate: an upsert carries the target row,
+    // a delete the head row
     val del = "__graft_restore_del"
-    val ups = grouped
-      .where(oldPresent && (!newPresent || !(col("o.p") <=> col("h.p"))))
-      .select(col("o.p.*")).withColumn(del, lit(false))
-    val dels = grouped
-      .where(!oldPresent && newPresent)
-      .select(col("h.p.*")).withColumn(del, lit(true))
-    val v = commitDelta(spark, baseDir, ups.unionByName(dels), Some(del))
-    appendMetaLine(baseDir, s"kind\t$v\trestore")
-    v
+    val restoring = grouped
+      .where((oldPresent && (!newPresent || !(col("o.p") <=> col("h.p")))) ||
+        (!oldPresent && newPresent))
+      .select(when(oldPresent, col("o.p")).otherwise(col("h.p")).as("__p"),
+        (!oldPresent).as(del))
+      .select(col("__p.*"), col(del))
+    commitStaged(spark, baseDir, restoring, Some(del), "DeltaChain.restore",
+      Some("restore"))
   }
 
   /** Per-commit storage census: version, kind, file count, bytes for
@@ -1537,17 +1458,10 @@ object DeltaChain {
     * only; no data read). */
   def commitBytes(spark: SparkSession, baseDir: String): DataFrame = {
     import spark.implicits._
-    def dirBytes(dir: String): (Int, Long) = {
-      val d = new java.io.File(dir)
-      val fs = Option(d.listFiles())
-        .map(_.filter(f => f.isFile && f.getName.endsWith(".parquet")))
-        .getOrElse(Array.empty[java.io.File])
-      (fs.length, fs.map(_.length()).sum)
-    }
     versions(baseDir).map { v =>
-      val (df, db) = dirBytes(deltaDir(baseDir, v))
-      val (cf, cb) = dirBytes(checkpointDir(baseDir, v))
-      (v, df, db, cf, cb)
+      val d = TableLog.census(deltaDir(baseDir, v))
+      val c = TableLog.census(checkpointDir(baseDir, v))
+      (v, d.files, d.bytes, c.files, c.bytes)
     }.toDF("version", "delta_files", "delta_bytes",
       "checkpoint_files", "checkpoint_bytes")
   }

@@ -20,14 +20,9 @@ import graft.{Orc, Tables}
 object SurfaceR10am extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** Whole dollars derived from exact cents (2-decimal money snaps to
-    * an integer under *100+0.5; /100.0 is correctly-rounded IEEE so
-    * floor lands identically on both engines). */
-  private val dollarsSql =
-    "CAST(floor(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) / 100.0) AS BIGINT)"
 
   /** Kilodollar buckets — bounded ≤ ~600 so the 4th power sum stays
     * far inside BIGINT even at sf1 (600⁴·1.5e6 ≈ 2e17). */

@@ -24,14 +24,9 @@ import graft.{Orc, Tables}
 object SurfaceR10ap extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** md5-uniform in (0,1) — the lp43 integer-nibble idiom. */
-  private def unifSql(key: String): String =
-    "((" + (1 to 6).map { i =>
-      s"(instr('0123456789abcdef', substr(md5($key), $i, 1)) - 1) * ${1L << (4 * (6 - i))}"
-    }.mkString(" + ") + " + 0.5) / 16777216.0)"
 
   /** Poisson(1) via inverse CDF on the seeded uniform — literal CDF
     * thresholds so both engines parse the identical doubles. */

@@ -18,15 +18,9 @@ import graft.{Orc, Tables}
 object SurfaceR10az extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** 24-bit integer hash of a (token, component) pair — the md5
-    * nibble idiom, portable across engines. */
-  private def hSql(key: String): String =
-    "(" + (1 to 6).map { i =>
-      s"(instr('0123456789abcdef', substr(md5($key), $i, 1)) - 1) * ${1L << (4 * (6 - i))}"
-    }.mkString(" + ") + ")"
 
   /** LP60: MINHASH ERROR — over the 300 pairs of a deterministic
     * 25-doc probe set (doc_id % 20 = 0), compare the k=8 MinHash

@@ -21,6 +21,7 @@ import graft.{Orc, Tables, Windows}
 object SurfaceR10bf extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -109,12 +110,6 @@ object SurfaceR10bf extends QueryBatch {
   val queries: Map[String, Q] = Map(
     "m141_chatterjee_xi" -> m141ChatterjeeXi,
     "m142_page_hinkley" -> m142PageHinkley)
-
-  private val dailySql =
-    """SELECT CAST(date_diff('day', DATE '1992-01-01',
-      |    CAST(o_orderdate AS DATE)) AS BIGINT) AS t,
-      |  CAST(count(*) AS BIGINT) AS y
-      |FROM orders GROUP BY 1""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "m141_chatterjee_xi" ->

@@ -24,14 +24,9 @@ import graft.{Orc, Tables}
 object SurfaceR10bg extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** 24-bit integer hash via md5 nibbles — portable across engines. */
-  private def hSql(key: String): String =
-    "(" + (1 to 6).map { i =>
-      s"(instr('0123456789abcdef', substr(md5($key), $i, 1)) - 1) * ${1L << (4 * (6 - i))}"
-    }.mkString(" + ") + ")"
 
   /** ±1 sign from the hash's low bit. */
   private def signSql(key: String): String =

@@ -22,6 +22,7 @@ import graft.{Orc, Tables, Windows}
 object SurfaceR10bi extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -31,12 +32,6 @@ object SurfaceR10bi extends QueryBatch {
   private val olsA = s"((CAST(sy AS DOUBLE) - $olsB * st) / n)"
   private val olsE = s"(CAST(y AS DOUBLE) - $olsA - $olsB * t)"
   private val olsEq = s"CAST(floor($olsE * 1e4 + 0.5) AS BIGINT)"
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    orders(s, d)
-      .select(datediff(col("o_orderdate").cast("date"),
-        lit("1992-01-01").cast("date")).cast("long").as("t"))
-      .groupBy("t").agg(count(lit(1)).as("y"))
 
   // ---- M145: Breusch–Pagan ----
 
@@ -118,12 +113,6 @@ object SurfaceR10bi extends QueryBatch {
   val queries: Map[String, Q] = Map(
     "m145_breusch_pagan" -> m145BreuschPagan,
     "m146_chow_test" -> m146ChowTest)
-
-  private val dailySql =
-    """SELECT CAST(date_diff('day', DATE '1992-01-01',
-      |    CAST(o_orderdate AS DATE)) AS BIGINT) AS t,
-      |  CAST(count(*) AS BIGINT) AS y
-      |FROM orders GROUP BY 1""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "m145_breusch_pagan" ->

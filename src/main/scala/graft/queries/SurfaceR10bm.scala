@@ -23,14 +23,9 @@ import graft.{Orc, Tables, Windows}
 object SurfaceR10bm extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    orders(s, d)
-      .select(datediff(col("o_orderdate").cast("date"),
-        lit("1992-01-01").cast("date")).cast("long").as("t"))
-      .groupBy("t").agg(count(lit(1)).as("y"))
 
   // ---- M151: two-sample Cramér–von Mises ----
 
@@ -124,12 +119,6 @@ object SurfaceR10bm extends QueryBatch {
   val queries: Map[String, Q] = Map(
     "m151_cramer_von_mises" -> m151CramerVonMises,
     "lt45_periodogram" -> lt45Periodogram)
-
-  private val dailySql =
-    """SELECT CAST(date_diff('day', DATE '1992-01-01',
-      |    CAST(o_orderdate AS DATE)) AS BIGINT) AS t,
-      |  CAST(count(*) AS BIGINT) AS y
-      |FROM orders GROUP BY 1""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "m151_cramer_von_mises" ->

@@ -24,14 +24,9 @@ import graft.{Orc, Tables, Windows}
 object SurfaceR10bo extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    orders(s, d)
-      .select(datediff(col("o_orderdate").cast("date"),
-        lit("1992-01-01").cast("date")).cast("long").as("t"))
-      .groupBy("t").agg(count(lit(1)).as("y"))
 
   // ---- M152: Kruskal–Wallis ----
 
@@ -124,12 +119,6 @@ object SurfaceR10bo extends QueryBatch {
   val queries: Map[String, Q] = Map(
     "m152_kruskal_wallis" -> m152KruskalWallis,
     "lt48_sax_motifs" -> lt48SaxMotifs)
-
-  private val dailySql =
-    """SELECT CAST(date_diff('day', DATE '1992-01-01',
-      |    CAST(o_orderdate AS DATE)) AS BIGINT) AS t,
-      |  CAST(count(*) AS BIGINT) AS y
-      |FROM orders GROUP BY 1""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "m152_kruskal_wallis" ->

@@ -23,6 +23,7 @@ import graft.{Orc, Tables}
 object SurfaceR10bq extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -67,12 +68,6 @@ object SurfaceR10bq extends QueryBatch {
   }
 
   // ---- LP64: LSH S-curve ----
-
-  /** 24-bit md5 nibble hash (lp60 idiom). */
-  private def hSql(key: String): String =
-    "(" + (1 to 6).map { i =>
-      s"(instr('0123456789abcdef', substr(md5($key), $i, 1)) - 1) * ${1L << (4 * (6 - i))}"
-    }.mkString(" + ") + ")"
 
   private val scTheory =
     "(1e0 - pow(1e0 - pow(bucket / 10e0 + 5e-2, 4e0), 2e0))"

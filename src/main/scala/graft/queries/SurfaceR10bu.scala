@@ -24,13 +24,9 @@ import graft.operators.PrefixSum
   */
 object SurfaceR10bu extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def hSql(key: String): String =
-    "(" + (1 to 6).map { i =>
-      s"(instr('0123456789abcdef', substr(md5($key), $i, 1)) - 1) * ${1L << (4 * (6 - i))}"
-    }.mkString(" + ") + ")"
 
   /** LP65: MULTINOMIAL SAMPLER — tokens sampled ∝ corpus frequency by
     * 64 deterministic inverse-CDF probes; output is the sampled

@@ -24,14 +24,9 @@ import graft.{Orc, Tables}
 object SurfaceR10bv extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def daily(s: SparkSession, d: String): DataFrame =
-    orders(s, d)
-      .select(datediff(col("o_orderdate").cast("date"),
-        lit("1992-01-01").cast("date")).cast("long").as("t"))
-      .groupBy("t").agg(count(lit(1)).as("y"))
 
   // ---- M157: quadratic trend ----
 
@@ -109,12 +104,6 @@ object SurfaceR10bv extends QueryBatch {
   val queries: Map[String, Q] = Map(
     "m157_quadratic_trend" -> m157QuadraticTrend,
     "m158_poisson_rate_test" -> m158PoissonRateTest)
-
-  private val dailySql =
-    """SELECT CAST(date_diff('day', DATE '1992-01-01',
-      |    CAST(o_orderdate AS DATE)) AS BIGINT) AS t,
-      |  CAST(count(*) AS BIGINT) AS y
-      |FROM orders GROUP BY 1""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "m157_quadratic_trend" ->

@@ -35,11 +35,9 @@ import graft.{Orc, Tables}
 object SurfaceR10cj extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private val Y0 = 1996
-  private val Y1 = 1997
 
   // Shared closed forms over exact integer (rev cents, vol units):
   // p = rev/(100·vol) dollars/unit; effects bridge rev1−rev0 dollars.

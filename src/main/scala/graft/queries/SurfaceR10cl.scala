@@ -34,6 +34,7 @@ import graft.{Orc, Tables}
 object SurfaceR10cl extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -92,9 +93,6 @@ object SurfaceR10cl extends QueryBatch {
       r4(expr(ols("a"))).as("slope_a"),
       r4(expr(ols("b"))).as("slope_b"))
   }
-
-  private val Y0 = 1996
-  private val Y1 = 1997
 
   /** Q45: SEGMENT MIGRATION — tier every active customer by exact
     * spend-quartile within each year (thresholds from the exact

@@ -34,11 +34,9 @@ import graft.{Orc, Tables}
 object SurfaceR10cp extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private val Y0 = 1996
-  private val Y1 = 1997
 
   // LMDI-I: contribution of factor f = L(R1,R0) · ln(f1/f0), with the
   // logarithmic mean L(a,b) = (a−b)/ln(a/b). Factors: customers C,

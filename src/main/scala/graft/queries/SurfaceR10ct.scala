@@ -33,11 +33,9 @@ import graft.{Orc, Tables}
 object SurfaceR10ct extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private val Y0 = 1996
-  private val Y1 = 1997
 
   // Cell stats (suffix c ∈ {t0,t1,c0,c1,p0,p1}): mean and variance
   // from exact integer (n, sum, sumsq).

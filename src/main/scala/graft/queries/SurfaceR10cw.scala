@@ -42,13 +42,9 @@ import graft.{Orc, Tables}
 object SurfaceR10cw extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** Whole dollars from exact cents — the m120 idiom, shared here so
-    * Bartlett and Brown–Forsythe read the same measurement. */
-  private val dollarsSql =
-    "CAST(floor(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) / 100.0) AS BIGINT)"
 
   // ---- LT61: (augmented) Dickey–Fuller, lag order 0, with constant ----
 

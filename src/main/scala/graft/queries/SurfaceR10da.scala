@@ -39,13 +39,11 @@ import graft.{Orc, Tables}
 object SurfaceR10da extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
 
   private val IRLS_ROUNDS = 3
-
-  private val dollarsSql =
-    "CAST(floor(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) / 100.0) AS BIGINT)"
 
   /** Huber tuning constant from the exact MAD: k = 1.345 · 1.4826 ·
     * (mad4/4); mad4 = percentile(2·|2x−med2|) is integral for even

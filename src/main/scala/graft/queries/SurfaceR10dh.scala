@@ -36,11 +36,9 @@ import graft.{Orc, Tables}
 object SurfaceR10dh extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private val dollarsSql =
-    "CAST(floor(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) / 100.0) AS BIGINT)"
 
   /** One ε's quantized per-row term: ε=1 uses ln (geomean route),
     * else (x/μ)^(1−ε). μ arrives as the exact pair (st, n). */

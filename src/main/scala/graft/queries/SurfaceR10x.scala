@@ -22,17 +22,11 @@ import graft.{Orc, Tables}
 object SurfaceR10x extends QueryBatch {
   import Orc.r4
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
 
   // ---- LP43: differentially private counts ----
-
-  /** md5-uniform in (0,1): 6 hex nibbles / 2^24, shifted off exact 0
-    * (the lp10/m33 integer-nibble idiom — reproducible both engines). */
-  private def unifSql(key: String): String =
-    "((" + (1 to 6).map { i =>
-      s"(instr('0123456789abcdef', substr(md5($key), $i, 1)) - 1) * ${1L << (4 * (6 - i))}"
-    }.mkString(" + ") + " + 0.5) / 16777216.0)"
 
   /** Laplace(b) noise via inverse CDF on the seeded uniform:
     * −b·sgn(u−½)·ln(1−2|u−½|). */

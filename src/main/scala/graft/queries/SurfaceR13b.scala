@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
-import graft.operators.{TableStats, VersionedTable, ZOrder}
+import graft.operators.{TableLog, TableStats, VersionedTable, ZOrder}
 
 /** Round-13 surface batch 2: the lakehouse suite on top of q50's
   * [[graft.operators.VersionedTable]] — file-statistics data skipping
@@ -35,22 +35,9 @@ import graft.operators.{TableStats, VersionedTable, ZOrder}
   */
 object SurfaceR13b extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def scratch(tag: String): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
-    graft.QueryGuard.deleteRecOnExit(root)
-    root
-  }
-
-  private def dataFiles(dir: String): Int = {
-    val d = new java.io.File(dir)
-    Option(d.listFiles()).map(_.count { f =>
-      f.isFile && f.getName.endsWith(".parquet")
-    }).getOrElse(0)
-  }
 
   // ---- Q52: zone-map data skipping on a range-clustered write ----
 
@@ -133,8 +120,8 @@ object SurfaceR13b extends QueryBatch {
       col("p_brand"))
     VersionedTable.create(root.getAbsolutePath, base.repartition(32))
     VersionedTable.compact(s, root.getAbsolutePath, 4)
-    val f1 = dataFiles(s"${root.getAbsolutePath}/v1")
-    val f2 = dataFiles(s"${root.getAbsolutePath}/v2")
+    val f1 = TableLog.census(s"${root.getAbsolutePath}/v1").files
+    val f2 = TableLog.census(s"${root.getAbsolutePath}/v2").files
     require(f2 < f1 && f2 <= 4,
       s"q54: compaction did not reduce file count ($f1 -> $f2)")
     (1 to 2).map { v =>

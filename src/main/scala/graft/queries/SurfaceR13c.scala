@@ -42,15 +42,9 @@ import graft.operators.VersionedTable
   */
 object SurfaceR13c extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def scratch(tag: String): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
-    graft.QueryGuard.deleteRecOnExit(root)
-    root
-  }
 
   /** Run `body` inside a uniquely-named catalog database rooted at an
     * exit-cleaned scratch LOCATION; drop CASCADE in finally. */

@@ -29,15 +29,9 @@ import graft.operators.VersionedTable
   */
 object SurfaceR13f extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def scratch(tag: String): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
-    graft.QueryGuard.deleteRecOnExit(root)
-    root
-  }
 
   // ---- Q62: cascading forget across a table graph ----
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{DeltaChain, VersionedTable}
+import graft.operators.{DeltaChain, TableLog, VersionedTable}
 
 /** Round-14 surface batch 1: delta-commit storage (VERDICT r13 item 2)
   * — [[graft.operators.DeltaChain]], the write-amplification-free
@@ -25,15 +25,9 @@ import graft.operators.{DeltaChain, VersionedTable}
   */
 object SurfaceR14a extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def scratch(tag: String): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
-    graft.QueryGuard.deleteRecOnExit(root)
-    root
-  }
 
   // ---- Q64: delta-commit chain ≡ snapshot chain, with byte census ----
 
@@ -117,12 +111,7 @@ object SurfaceR14a extends QueryBatch {
     val census = DeltaChain.commitBytes(s, dRoot)
       .where(col("version") >= 2)
       .agg(sum("delta_bytes")).collect()(0).getLong(0)
-    val snapBytes = (2 to 4).map { v =>
-      val dir = new java.io.File(s"$sRoot/v$v")
-      Option(dir.listFiles()).map(_.filter(f =>
-        f.isFile && f.getName.endsWith(".parquet")).map(_.length()).sum)
-        .getOrElse(0L)
-    }.sum
+    val snapBytes = (2 to 4).map(v => TableLog.census(s"$sRoot/v$v").bytes).sum
     require(census * 3 < snapBytes,
       s"q64: delta commits wrote $census bytes vs $snapBytes snapshot bytes " +
         "— commit cost is not ∝ delta")
@@ -178,15 +167,7 @@ object SurfaceR14a extends QueryBatch {
     require(fileSet(s"$dvRoot/v1") == before && before.nonEmpty,
       "q65: DV commits altered the base data-file set")
     // (2) bytes written ∝ rows deleted: sidecar commits vs full rewrites
-    def verBytes(root: String, v: Int): Long = {
-      var b = 0L
-      val walk = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(s"$root/v$v"))
-      try walk.forEach(p =>
-        if (java.nio.file.Files.isRegularFile(p)) b += java.nio.file.Files.size(p))
-      finally walk.close()
-      b
-    }
+    def verBytes(root: String, v: Int): Long = TableLog.census(s"$root/v$v").allBytes
     val dvBytes = verBytes(dvRoot, 2) + verBytes(dvRoot, 3)
     val cowBytes = verBytes(cowRoot, 2) + verBytes(cowRoot, 3)
     // the 2× ratio is a SCALE claim: below ~32 KB a parquet file is

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
-import graft.operators.{DeltaChain, IncrementalAgg, VersionedTable}
+import graft.operators.{DeltaChain, IncrementalAgg, TableLog, VersionedTable}
 
 /** Round-14 surface batch 2: the delta-chain table as a PIPELINE
   * component — per-commit CDF with preimages (q66 consumes it to
@@ -26,15 +26,9 @@ import graft.operators.{DeltaChain, IncrementalAgg, VersionedTable}
   */
 object SurfaceR14b extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def scratch(tag: String): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
-    graft.QueryGuard.deleteRecOnExit(root)
-    root
-  }
 
   // ---- Q66: incremental MV maintenance from the stored changelog ----
 
@@ -186,15 +180,7 @@ object SurfaceR14b extends QueryBatch {
     VersionedTable.deleteWhere(s, cowRoot, col("c_custkey") % 7 === 0)
     require(fileSet(s"$dvRoot/v1") == before && before.nonEmpty,
       "q67: DV DML altered the base data-file set")
-    def verBytes(root: String, v: Int): Long = {
-      var b = 0L
-      val walk = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(s"$root/v$v"))
-      try walk.forEach(p =>
-        if (java.nio.file.Files.isRegularFile(p)) b += java.nio.file.Files.size(p))
-      finally walk.close()
-      b
-    }
+    def verBytes(root: String, v: Int): Long = TableLog.census(s"$root/v$v").allBytes
     val dvBytes = verBytes(dvRoot, 2) + verBytes(dvRoot, 3)
     val cowBytes = verBytes(cowRoot, 2) + verBytes(cowRoot, 3)
     if (cowBytes >= 32768)

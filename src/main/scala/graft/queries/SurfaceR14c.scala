@@ -25,6 +25,7 @@ import graft.operators.DeltaChain
   */
 object SurfaceR14c extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -84,13 +85,6 @@ object SurfaceR14c extends QueryBatch {
     }.toSeq
     rows.toDF("month_start", "inter_exact", "union_exact", "jaccard_ok")
       .orderBy("month_start")
-  }
-
-  private def scratch(tag: String): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
-    graft.QueryGuard.deleteRecOnExit(root)
-    root
   }
 
   // ---- Q68: metadata-only schema evolution on the delta chain ----

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{DeltaChain, IncrementalAgg, VersionedTable}
+import graft.operators.{DeltaChain, IncrementalAgg, TableLog, VersionedTable}
 
 /** Round-15 surface batch 1: the delta-chain lifecycle completed —
   * OPTIMIZE small-file compaction (q69, VERDICT r14 item 2), batched
@@ -28,20 +28,11 @@ import graft.operators.{DeltaChain, IncrementalAgg, VersionedTable}
   */
 object SurfaceR15a extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def scratch(tag: String): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
-    graft.QueryGuard.deleteRecOnExit(root)
-    root
-  }
-
-  private def parquetFiles(dir: String): Int =
-    Option(new java.io.File(dir).listFiles())
-      .map(_.count(f => f.isFile && f.getName.endsWith(".parquet")))
-      .getOrElse(0)
+  private def parquetFiles(dir: String): Int = TableLog.census(dir).files
 
   // ---- Q69: OPTIMIZE (small-file compaction) on the delta chain ----
 

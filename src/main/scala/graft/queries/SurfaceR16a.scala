@@ -26,15 +26,9 @@ import graft.operators.{DeltaChain, IncrementalAgg}
   */
 object SurfaceR16a extends QueryBatch {
   import Tables._
+  import Shared._
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def scratch(tag: String): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
-    graft.QueryGuard.deleteRecOnExit(root)
-    root
-  }
 
   // ---- Q74: DROP/RENAME COLUMN via column mapping ----
 

@@ -192,27 +192,14 @@ object SurfaceR8c extends QueryBatch {
       .where(col("pos") <= (col("m") - ceil(col("m") * lit(thr)) + 1L))
       .select(col("doc_id"), col("tok"), col("m"), col("pos").cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // SALTED candidate self-join (guide §2.5, VERDICT r17 item 4): the
-    // prefix vocabulary is tiny and Zipfian by construction — at sf0.1,
-    // 15 distinct prefix tokens of which TWO own 96% of the pair fanout
-    // (per-token pairs n·(n−1)/2: "agg" 53%, "batch" 43%). A plain
-    // equi-join on tok therefore hash-clusters ~96% of the SMJ's pair
-    // GENERATION onto two shuffle partitions — two cores do the stage's
-    // work at any cluster size, and AQE's skew splitter never fires
-    // because the skew is in join OUTPUT fanout, not input bytes. Salt:
-    // the a-side carries pmod(xxhash64(a_id), S); the b-side explodes
-    // all S salt values; joining on (tok, salt) spreads each hot
-    // token's pairs over S partitions. Every (a, b, tok) match appears
-    // EXACTLY once (b is replicated to all salts, a picks one), so the
-    // pair set — and the 1,860,901 candidate counter — is unchanged.
-    // S = defaultParallelism: scale-adaptive, never a local constant;
-    // the replicated side grows S× but is prefix-postings-sized (8.8k
-    // rows at sf0.1), noise next to the fanout it spreads.
-    val salts = s.sparkContext.defaultParallelism
+    // A plain equi-join on tok. The prefix vocabulary is Zipfian (at
+    // sf0.1 two tokens own 96% of the pair fanout), but salting the
+    // join on (tok, pmod(xxhash64(a_id), defaultParallelism)) lost 7 of
+    // 10 alternating `Cli probe` pairs (local[32] on a 4-core host,
+    // median of three walls: 12.1 s salted vs 7.9 s plain), so it is
+    // not used.
     val a = pref.toDF("a_id", "tok", "ma", "pa")
-      .withColumn("sa", pmod(xxhash64(col("a_id")), lit(salts.toLong)))
     val b = pref.toDF("b_id", "tok", "mb", "pb")
-      .withColumn("sb", explode(sequence(lit(0L), lit(salts.toLong - 1L))))
     // PPJoin positional filter: with both docs' tokens in the same
     // global (df, tok) order, a common token at 1-indexed positions
     // (pa, pb) bounds the overlap by
@@ -226,7 +213,7 @@ object SurfaceR8c extends QueryBatch {
     // with a same-shuffle groupBy) and prune pairs before the
     // verification joins ever see them.
     val sized = a.join(b,
-        a("tok") === b("tok") && col("sa") === col("sb") &&
+        a("tok") === b("tok") &&
           col("a_id") < col("b_id") &&
           col("ma") >= ceil(col("mb") * lit(thr)) &&
           col("mb") >= ceil(col("ma") * lit(thr)))

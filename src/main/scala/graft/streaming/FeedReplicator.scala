@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.DeltaChain
+import graft.operators.{DeltaChain, TableLog}
 
 /** Packaged change-feed replication consumer (SURVEY §21.1 thread 3 —
   * the wait-for-contiguous upgrade over t29's fail-loudly stance).
@@ -47,15 +47,12 @@ final class FeedReplicator(
   // A crash between writing a spill temp dir and its atomic move leaks
   // an orphan .tmp_v* forever — no other janitor covers spillDir
   // (DeltaChain's sweep is scoped to .stage_d_* under the table dir).
-  // Swept at construction: any .tmp_v* present when a consumer starts
-  // is by definition a dead writer's residue (live temps exist only
-  // inside one applyBatch call on this consumer), and the spilled
-  // version is re-deliverable at-least-once, so deletion is always
-  // safe (ADVICE r17).
-  Option(new java.io.File(spillDir).listFiles()).foreach(_.foreach { f =>
-    if (f.isDirectory && f.getName.startsWith(".tmp_v"))
-      deleteRec(f.toPath)
-  })
+  // Swept at construction by the tables' own age-gated janitor: a
+  // .tmp_v* past the gate is a dead writer's residue, and its version
+  // is re-deliverable at-least-once, so deletion is safe (ADVICE r17).
+  // A younger one may be another live consumer's mid-spill on a shared
+  // spill dir, and survives (ADVICE r18).
+  TableLog.sweepStale(spillDir, ".tmp_v")
 
   /** Last source version applied to the replica. */
   def lastApplied: Int = applied
@@ -86,18 +83,11 @@ final class FeedReplicator(
     applied += 1
   }
 
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    val walk = Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.deleteIfExists(f))
-    finally walk.close()
-  }
-
   private def drainSpill(): Unit = {
     while (Files.exists(pendingPath(applied + 1))) {
       val p = pendingPath(applied + 1)
       commitOne(spark.read.parquet(p.toString))
-      deleteRec(p)
+      TableLog.deleteRecursively(p)
     }
   }
 
@@ -126,7 +116,7 @@ final class FeedReplicator(
           // deleted and rewritten from this redelivery.
           val p = pendingPath(v)
           if (Files.exists(p) && !Files.exists(p.resolve("_SUCCESS")))
-            deleteRec(p)
+            TableLog.deleteRecursively(p)
           if (!Files.exists(p)) {
             val tmp = Paths.get(spillDir,
               s".tmp_v${v}_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -141,9 +131,7 @@ final class FeedReplicator(
       // the patience clock only runs while something is actually
       // WAITING: a pure-redelivery batch (every version <= applied,
       // nothing spilled) is not a gap
-      val pendingExists =
-        Option(new java.io.File(spillDir).listFiles()).exists(
-          _.exists(f => f.isDirectory && f.getName.matches("v\\d+")))
+      val pendingExists = TableLog.numberedDirs(spillDir, "v").nonEmpty
       if (progressed || !pendingExists) gapAge = 0
       else {
         gapAge += 1

@@ -125,6 +125,18 @@ class FeedReplicatorSpec extends SparkSpec {
     assert(!new java.io.File(rep, "d4").exists())
   }
 
+  /** A spill temp dir holding one file, both last modified `ageMs` ago. */
+  private def plantTmp(spill: String, name: String, ageMs: Long): java.io.File = {
+    val d = new java.io.File(spill, name)
+    assert(d.mkdirs())
+    val f = d.toPath.resolve("part-00000.parquet")
+    java.nio.file.Files.write(f, Array[Byte](1, 2, 3))
+    val t = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs)
+    java.nio.file.Files.setLastModifiedTime(f, t)
+    java.nio.file.Files.setLastModifiedTime(d.toPath, t)
+    d
+  }
+
   test("stale spill temp dirs from a dead writer are swept at construction") {
     import spark.implicits._
     val src = fresh("src7"); val rep = fresh("rep7"); val spill = fresh("spill7")
@@ -132,13 +144,16 @@ class FeedReplicatorSpec extends SparkSpec {
     DeltaChain.create(rep, Seq((1L, 10L), (2L, 20L)).toDF("k", "n"),
       Seq("k"), checkpointEvery = 100)
     // a crash between the spill write and its atomic move leaves an
-    // orphan .tmp_v* dir no janitor covered (ADVICE r17) — simulate one
-    val stale = new java.io.File(spill, ".tmp_v3_deadbeef")
-    assert(new java.io.File(stale, "part-00000.parquet").getParentFile.mkdirs())
-    java.nio.file.Files.write(stale.toPath.resolve("part-00000.parquet"),
-      Array[Byte](1, 2, 3))
+    // orphan .tmp_v* dir no janitor covered (ADVICE r17) — simulate one,
+    // past the staging janitor's age gate
+    val stale = plantTmp(spill, ".tmp_v3_deadbeef", ageMs = 48L * 3600 * 1000)
     val r = new FeedReplicator(spark, rep, spill)
     assert(!stale.exists(), "construction must sweep dead .tmp_v* residue")
+    // a fresh .tmp_v* may be another live consumer's mid-spill on the
+    // same spill dir (ADVICE r18): a second construction must leave it
+    val live = plantTmp(spill, ".tmp_v4_live1234", ageMs = 0)
+    new FeedReplicator(spark, rep, spill)
+    assert(live.exists(), "the age gate must protect a live consumer's spill")
     // and the consumer still works end to end afterwards
     def feedAt(v: Int) = DeltaChain.changelog(spark, src, v - 1, v)
     assert(r.applyBatch(feedAt(2)) === 2)
