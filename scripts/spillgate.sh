@@ -19,9 +19,9 @@
 #   defaults (262144):  lj2_prefix_jaccard ls3_tfidf_topk lpq_pq_ann q2_join3
 #   r13 heavies (8192): lt85_crossdoc_spans q53_zorder_skipping
 #                       q58_incremental_mv q61_entity_resolution
-#   graph loops (8192): SPARK_GRAFT_SPILL_KEYS=lg12_louvain,lg15_ktruss
+#   graph loops (8192): SPARK_GRAFT_ONLY=lg12_louvain,lg15_ktruss
 #                       (967 MB mem + 13 MB disk each, hash-identical)
-#   window frames (256): SPARK_GRAFT_SPILL_KEYS=w11_moving_median,lt22_rolling_corr
+#   window frames (256): SPARK_GRAFT_ONLY=w11_moving_median,lt22_rolling_corr
 #                       (55 / 231 MB mem — their per-partition frame
 #                       buffers sit under 8192 rows at sf0.1, so the
 #                       window class needs the lower threshold to

@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *    no session (scripts/slope_full.sh batches the list).
   *  - `probe <key> [sfDir] [reps]` forces ONE registry query `reps` times
   *    (default 3) with a noop-format write (every column computed),
-  *    sweeping the block manager before each rep, and prints the walls
+  *    each rep one [[QueryGuard.runKey]] (swept after it, so rep 1's
+  *    residue neither warms nor taxes reps 2..N), and prints the walls
   *    as one JSON line. This is how BASELINE.md's isolated bands are
   *    produced: in-bench readings carry end-of-drive JVM heap state and
   *    whole-suite cache history, so their outliers are adjudicated
@@ -20,8 +21,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *    lines, so plan files committed under plans/ describe what the
   *    bench runs.
   *
-  * `probe` and `plan` run on `local[32]` unless SPARK_GRAFT_CPUS says
-  * otherwise; sfDir defaults to the sf0.1 fixtures.
+  * `probe` runs on one core per available processor and `plan` on
+  * `local[32]` (so its output stays comparable with plans/r17 and
+  * plans/r18), unless SPARK_GRAFT_CPUS says otherwise; sfDir defaults
+  * to the sf0.1 fixtures.
   *
   * Usage: runMain graft.Cli keys|probe|plan ...
   */
@@ -40,18 +43,15 @@ object Cli {
 
   private def probe(key: String, sfDir: String, reps: Int): Unit = {
     val fn = SparkEntry.queries.getOrElse(key, sys.error(s"unknown query key: $key"))
-    val spark = GraftSession.mainBuilder(32).getOrCreate()
+    val spark = GraftSession.mainBuilder(Runtime.getRuntime.availableProcessors).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val walls = (1 to reps).map { i =>
-      // defined block-manager state per rep: without the sweep, rep 1's
-      // persist/localCheckpoint residue warms (or taxes) reps 2..N and
-      // the band stops being an isolated-cost measurement
-      CacheLifecycle.sweep(spark)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val w = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[probe] $key run$i $w%.2fs")
-      w
+      val run = QueryGuard.runKey(spark, "probe", key, None) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
+      run.get
+      System.err.println(f"[probe] $key run$i ${run.wallS}%.2fs")
+      run.wallS
     }
     println(f"""{"probe":"$key","sf":"$sfDir","runs":[${
       walls.map(w => f"$w%.3f").mkString(",")}]}""")

@@ -3,10 +3,12 @@ package graft
 import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit, TimeoutException}
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBridge
 
-/** Wall-clock budget enforcement for a single registry query, shared by
-  * Verify (the driver's correctness drive), Tripwire (the sf0.001
-  * runtime gate) and VerifyWatchdogSpec.
+/** The one guarded per-query run ([[runKey]]) of every registry drive
+  * — Verify, Tripwire's three modes, SpillGate and `Cli probe` — and
+  * the wall-clock budget enforcement ([[run]]) under it.
   *
   * Round 7's watchdog only called `sc.cancelJobGroup`, which kills
   * running JOBS but cannot unblock DRIVER-side waits: a streaming
@@ -25,6 +27,58 @@ object QueryGuard {
   case object Ok extends Outcome
   case object Timeout extends Outcome
   final case class Failed(error: Throwable) extends Outcome
+
+  /** One run of one key: outcome, the body's value (on Ok), wall
+    * seconds, task spill, and the plain persists it left behind (0 for
+    * a key on [[CacheLifecycle.persistAllowlist]]). */
+  final case class Record[+T](
+      outcome: Outcome,
+      value: Option[T],
+      wallS: Double,
+      spillMemBytes: Long,
+      spillDiskBytes: Long,
+      leakedPersists: Int) {
+
+    /** The value, or the failure thrown (SpillGate, `Cli probe`). */
+    def get: T = outcome match {
+      case Ok        => value.get
+      case Failed(e) => throw e
+      case Timeout   => throw new TimeoutException("query over its wall budget")
+    }
+  }
+
+  /** One spill listener per SparkContext, registered on first use and
+    * never reset: a run reads its growth. Weak keys, so a stopped
+    * context is not kept alive. */
+  private val tallies = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkContext, ListenerBridge.SpillTally]())
+
+  private def tally(sc: SparkContext): ListenerBridge.SpillTally =
+    tallies.computeIfAbsent(sc, ListenerBridge.register(_))
+
+  /** Run key `key`'s `body` as job group `$tag-$key` under `budgetS`
+    * ([[run]]), timing the body only, then sweep the block manager so
+    * the next run starts from a defined state — a drive of hundreds of
+    * keys otherwise accumulates persist/localCheckpoint residue and
+    * late keys inherit a degraded JVM (VERDICT r11 items 1-2). Listener
+    * events post asynchronously, so the tally is drained on both sides
+    * of the body. */
+  def runKey[T](spark: SparkSession, tag: String, key: String, budgetS: Option[Long])(
+      body: => T): Record[T] = {
+    val sc = spark.sparkContext
+    val spill = tally(sc)
+    ListenerBridge.drain(sc)
+    val (mem0, disk0) = (spill.memSpilled.get, spill.diskSpilled.get)
+    @volatile var value: Option[T] = None
+    val t0 = System.nanoTime()
+    val outcome = run(sc, s"$tag-$key", budgetS) { value = Some(body) }
+    val wallS = (System.nanoTime() - t0) / 1e9
+    ListenerBridge.drain(sc)
+    val swept = CacheLifecycle.sweep(spark)
+    Record(outcome, if (outcome == Ok) value else None, wallS,
+      spill.memSpilled.get - mem0, spill.diskSpilled.get - disk0,
+      if (CacheLifecycle.persistAllowlist(key)) 0 else swept.plain)
+  }
 
   /** Run `body` on a fresh daemon thread under `budgetS` wall seconds
     * (None = unbounded). The query's Spark jobs are tagged with job

@@ -15,10 +15,14 @@ package graft
   *
   * The content hash is [[Orc.contentHash]]: order-independent,
   * overflow-free, and sensitive to any dropped/duplicated/altered row.
+  * Each key is one [[QueryGuard.runKey]] (unbounded), which times it,
+  * reads its spill and sweeps the block manager after it; a key that
+  * fails stops the gate with its cause, so no JSON line is printed.
   *
   * Usage:  runMain graft.SpillGate [sfDir]   (or java -cp ... graft.SpillGate)
-  *   SPARK_GRAFT_SPILL_KEYS   key spec ([[SparkEntry.select]]), default
-  *                            the 4 heavy probes
+  *   SPARK_GRAFT_ONLY         key spec ([[SparkEntry.select]], as in
+  *                            Verify and Tripwire), default the 4 heavy
+  *                            probes
   *   SPARK_GRAFT_CPUS         local[N], default 8
   *   SPARK_GRAFT_FORCE_SPILL_ELEMS  when set, every external sorter /
   *     hash-agg force-spills after N in-memory elements (Spark's
@@ -33,7 +37,7 @@ object SpillGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val keys = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_SPILL_KEYS",
+    val keys = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_ONLY",
       "lj2_prefix_jaccard,ls3_tfidf_topk,lpq_pq_ann,q2_join3"))
     val builder = GraftSession.mainBuilder(8)
       .config("spark.sql.codegen.fallback", "false")
@@ -48,25 +52,21 @@ object SpillGate {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val tally = org.apache.spark.sql.graft.ListenerBridge.register(spark.sparkContext)
     val maxHeapMb = Runtime.getRuntime.maxMemory() / (1L << 20)
+    def mb(bytes: Long) = bytes / (1L << 20)
 
+    // per key: its JSON member and its disk spill in MB, whose sum is
+    // the (b) assertion input for the script
     val parts = keys.map { key =>
-      CacheLifecycle.sweep(spark)
-      tally.reset()
-      val t0 = System.nanoTime()
-      val (rows, hash) = Orc.contentHash(SparkEntry.queries(key)(spark, sfDir))
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
-      f""""$key":{"sec":$sec%.2f,"rows":$rows,"hash":"$hash",""" +
-        s""""spill_mem_mb":${tally.memSpilled.get / (1L << 20)},""" +
-        s""""spill_disk_mb":${tally.diskSpilled.get / (1L << 20)}}"""
+      val run = QueryGuard.runKey(spark, "spill", key, None) {
+        Orc.contentHash(SparkEntry.queries(key)(spark, sfDir))
+      }
+      val (rows, hash) = run.get
+      (f""""$key":{"sec":${run.wallS}%.2f,"rows":$rows,"hash":"$hash",""" +
+        s""""spill_mem_mb":${mb(run.spillMemBytes)},""" +
+        s""""spill_disk_mb":${mb(run.spillDiskBytes)}}""", mb(run.spillDiskBytes))
     }
-    // total spill across the run, the (b) assertion input for the script
-    val totalRe = """"spill_disk_mb":(\d+)""".r
-    val totalDisk = parts.flatMap(p =>
-      totalRe.findAllMatchIn(p).map(_.group(1).toLong)).sum
-    println(s"""{"max_heap_mb":$maxHeapMb,"queries":${parts.mkString("{", ",", "}")},"spilled_total_mb":$totalDisk,"sf":"$sfDir"}""")
+    println(s"""{"max_heap_mb":$maxHeapMb,"queries":${parts.map(_._1).mkString("{", ",", "}")},"spilled_total_mb":${parts.map(_._2).sum},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

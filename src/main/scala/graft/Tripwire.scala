@@ -37,22 +37,26 @@ object SlopeGate {
   * the headline + heavy-probe subset under a long budget without
   * paying an hours-long full-registry drive at 6 M rows.
   *
-  * SCALE-SLOPE MODE (round 11): the 30 s ceiling and the plan audit
-  * catch shapes, but a super-linear operator that is merely FAST at
-  * sf0.001 slips both. Set SPARK_GRAFT_SLOPE_DIR=/root/testdata/sf0.01
-  * and every query ALSO runs at that second SF immediately after its
-  * small-SF run (back-to-back, so the large run is the warmer of the
-  * two — biasing ratios DOWN, i.e. against false positives); any query
-  * whose runtime grows faster than SlopeGate's cap × data-ratio bound
-  * is failed BY NAME. Knobs:
-  *   SPARK_GRAFT_SLOPE_BUDGET_S  large-SF per-query ceiling, default 120
-  *   SPARK_GRAFT_SLOPE_CAP       runtime-ratio cap, default 30
-  *
-  * Results are forced with a `noop`-format write (full computation of
-  * every operator, no output, no count()-style column pruning), so a
-  * scale-killer hiding in an unaggregated column still pays its cost.
-  * Exit code 0 = all queries under ceiling (and slope, if enabled);
-  * 1 = offenders listed on stderr, one line each.
+  * One drive loop of [[QueryGuard.runKey]] runs; the mode picks the
+  * per-key check:
+  *  - plain: a `noop`-format write (every operator computed, no
+  *    count()-style column pruning), so a scale-killer hiding in an
+  *    unaggregated column still pays its cost;
+  *  - SCALE-SLOPE (round 11; a super-linear operator that is merely
+  *    FAST at sf0.001 slips the ceiling): with SPARK_GRAFT_SLOPE_DIR
+  *    naming a 10× fixture dir (sf0.01 from sf0.001) a key that passes
+  *    reruns at that SF right after (the warmer run, biasing ratios
+  *    DOWN) under SPARK_GRAFT_SLOPE_BUDGET_S (default 120), and fails BY
+  *    NAME past [[SlopeGate.DefaultCap]]× its small wall;
+  *  - SAME-SESSION DOUBLE DRIVE (VERDICT r13 item 5; the fresh-JVM
+  *    determinism gate cannot see a key corrupting its OWN second run
+  *    through session residue, like the r13 x33 temp-view leak): with
+  *    SPARK_GRAFT_DOUBLE_DRIVE=1 each key runs twice in this session
+  *    and the two [[Orc.contentHash]]es must match.
+  * In every mode a key whose runs leave a plain persisted RDD behind is
+  * an offender too — this drive is the repo-wide persist-lifecycle
+  * audit (VERDICT r11 item 2). Exit 0 = no offender; 1 = offenders
+  * listed on stderr, one line each.
   */
 object Tripwire {
   def main(args: Array[String]): Unit = {
@@ -62,8 +66,7 @@ object Tripwire {
     val slopeDir = sys.env.get("SPARK_GRAFT_SLOPE_DIR")
     val slopeBudgetS = sys.env.get("SPARK_GRAFT_SLOPE_BUDGET_S")
       .map(_.toLong).getOrElse(120L)
-    val slopeCap = sys.env.get("SPARK_GRAFT_SLOPE_CAP")
-      .map(_.toDouble).getOrElse(SlopeGate.DefaultCap)
+    val doubleDrive = sys.env.get("SPARK_GRAFT_DOUBLE_DRIVE").contains("1")
     val queries = SparkEntry.queries
     // a misspelled SPARK_GRAFT_ONLY fails here, before any driving, so
     // the slope gate cannot record a vacuous "PASS: 0 queries"
@@ -71,125 +74,62 @@ object Tripwire {
       .getOrElse(queries.keys.toSeq)
     val spark = GraftSession.mainBuilder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sc = spark.sparkContext
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     var slowest = ("", 0.0)
-    // SAME-SESSION double-drive mode (VERDICT r13 item 5): the standing
-    // determinism gate drives the registry in two FRESH JVMs — it can
-    // never see the class of bug where a key corrupts ITS OWN second
-    // run through session residue (the r13 x33 temp-view leak was
-    // caught only by accident at decade-3). With
-    // SPARK_GRAFT_DOUBLE_DRIVE=1 every selected key runs twice in THIS
-    // session and the two order-independent content hashes
-    // ([[Orc.contentHash]], as in SpillGate) must match; a mismatch, or
-    // a second run that errors where the first succeeded, fails the
-    // gate BY NAME.
-    val doubleDrive = sys.env.get("SPARK_GRAFT_DOUBLE_DRIVE").contains("1")
-    def contentHash(name: String, slot: String): Either[String, (Long, String)] = {
-      var h: Option[(Long, String)] = None
-      QueryGuard.run(sc, s"dd-$slot-$name", Some(budgetS)) {
-        h = Some(Orc.contentHash(queries(name)(spark, sfDir)))
-      } match {
-        case QueryGuard.Ok        => Right(h.get)
-        case QueryGuard.Timeout   => Left(s"TIMEOUT > ${budgetS}s")
-        case QueryGuard.Failed(e) => Left(s"FAILED: ${e.getMessage}")
-      }
+
+    def drive[T](name: String, tag: String, dir: String, budget: Long)(
+        force: org.apache.spark.sql.DataFrame => T) =
+      QueryGuard.runKey(spark, tag, name, Some(budget))(force(queries(name)(spark, dir)))
+    def noop(name: String, tag: String, dir: String, budget: Long) =
+      drive(name, tag, dir, budget)(_.write.format("noop").mode("overwrite").save())
+    def log(name: String, line: String): Unit =
+      System.err.println(s"[tripwire] $name $line")
+    def offend(name: String, entry: String, line: String): Unit = {
+      offenders += s"$name $entry"
+      log(name, line)
     }
-    if (doubleDrive) {
-      selected.foreach { name =>
-        val t0 = System.nanoTime()
-        val first = contentHash(name, "a")
-        CacheLifecycle.sweep(spark) // defined state, but SAME session — no restart
-        val second = contentHash(name, "b")
-        val wall = (System.nanoTime() - t0) / 1e9
-        (first, second) match {
-          case (Right(a), Right(b)) if a == b =>
-            System.err.println(f"[tripwire] $name dd ok $wall%.1fs (${a._1} rows)")
-          case (Right(a), Right(b)) =>
-            offenders += s"$name SAME-SESSION NONDETERMINISM: " +
-              s"drive1=(${a._1},${a._2}) drive2=(${b._1},${b._2})"
-            System.err.println(s"[tripwire] $name SAME-SESSION NONDETERMINISM")
-          case (Left(e), _) =>
-            offenders += s"$name dd drive1 $e"
-            System.err.println(s"[tripwire] $name dd drive1 $e")
-          case (_, Left(e)) =>
-            offenders += s"$name dd drive2 $e (first drive succeeded — residue?)"
-            System.err.println(s"[tripwire] $name dd drive2 $e")
-        }
-        val swept = CacheLifecycle.sweep(spark)
-        if (swept.plain > 0 && !CacheLifecycle.persistAllowlist(name)) {
-          offenders += s"$name PERSIST LEAK: ${swept.plain} non-checkpoint cached RDD(s)"
-          System.err.println(s"[tripwire] $name PERSIST LEAK: ${swept.plain}")
-        }
+    // a run that timed out or failed, named with which run it was
+    def unfinished(name: String, what: String, run: QueryGuard.Record[_], budget: Long): Unit =
+      run.outcome match {
+        case QueryGuard.Failed(e) => offend(name, s"${what}FAILED: ${e.getMessage}",
+          f"${what}FAILED after ${run.wallS}%.1fs: ${e.getMessage}")
+        case _ => offend(name, s"${what}TIMEOUT > ${budget}s", s"${what}TIMEOUT > ${budget}s")
       }
-      spark.stop()
-      if (offenders.nonEmpty) {
-        System.err.println(s"[tripwire] ${offenders.size} offender(s):")
-        offenders.foreach(o => System.err.println(s"[tripwire]   $o"))
-        sys.exit(1)
-      }
-      println(s"[tripwire] PASS: ${selected.size} queries double-driven " +
-        s"same-session, all hash-identical")
-      return
-    }
+
     selected.foreach { name =>
-      val fn = queries(name)
-      val t0 = System.nanoTime()
-      def wall = (System.nanoTime() - t0) / 1e9
-      QueryGuard.run(sc, s"tripwire-$name", Some(budgetS)) {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      } match {
-        case QueryGuard.Ok =>
-          val wSmall = wall
-          if (wSmall > slowest._2) slowest = (name, wSmall)
-          slopeDir match {
-            case None =>
-              System.err.println(f"[tripwire] $name ok $wSmall%.1fs")
-            case Some(dir) =>
-              val t1 = System.nanoTime()
-              def wall2 = (System.nanoTime() - t1) / 1e9
-              QueryGuard.run(sc, s"slope-$name", Some(slopeBudgetS)) {
-                fn(spark, dir).write.format("noop").mode("overwrite").save()
-              } match {
-                case QueryGuard.Ok =>
-                  val wLarge = wall2
-                  if (SlopeGate.breach(wSmall, wLarge, slopeCap)) {
-                    offenders += f"$name SLOPE $wSmall%.1fs -> $wLarge%.1fs " +
-                      f"(> ${slopeCap}%.0fx)"
-                    System.err.println(
-                      f"[tripwire] $name SLOPE BREACH $wSmall%.1fs -> $wLarge%.1fs")
-                  } else {
-                    System.err.println(
-                      f"[tripwire] $name ok $wSmall%.1fs -> $wLarge%.1fs")
-                  }
-                case QueryGuard.Timeout =>
-                  offenders += s"$name SLOPE TIMEOUT > ${slopeBudgetS}s"
-                  System.err.println(
-                    s"[tripwire] $name SLOPE TIMEOUT > ${slopeBudgetS}s")
-                case QueryGuard.Failed(e) =>
-                  offenders += s"$name SLOPE FAILED: ${e.getMessage}"
-                  System.err.println(
-                    f"[tripwire] $name SLOPE FAILED after $wall2%.1fs: ${e.getMessage}")
-              }
-          }
-        case QueryGuard.Timeout =>
-          offenders += s"$name TIMEOUT > ${budgetS}s"
-          System.err.println(s"[tripwire] $name TIMEOUT > ${budgetS}s")
-        case QueryGuard.Failed(e) =>
-          offenders += s"$name FAILED: ${e.getMessage}"
-          System.err.println(f"[tripwire] $name FAILED after $wall%.1fs: ${e.getMessage}")
+      val runs = if (doubleDrive) {
+        val Seq(a, b) = Seq("dd-a", "dd-b").map(drive(name, _, sfDir, budgetS)(Orc.contentHash))
+        (a.value, b.value) match {
+          case (Some(h1), Some(h2)) if h1 == h2 =>
+            log(name, f"dd ok ${a.wallS + b.wallS}%.1fs (${h1._1} rows)")
+          case (Some(h1), Some(h2)) => offend(name, "SAME-SESSION NONDETERMINISM: " +
+            s"drive1=(${h1._1},${h1._2}) drive2=(${h2._1},${h2._2})",
+            "SAME-SESSION NONDETERMINISM")
+          case (None, _) => unfinished(name, "dd drive1 ", a, budgetS)
+          case _ => unfinished(name, "dd drive2 (drive1 ok) ", b, budgetS)
+        }
+        Seq(a, b)
+      } else {
+        val small = noop(name, "tripwire", sfDir, budgetS)
+        val large = if (small.outcome != QueryGuard.Ok) None
+          else slopeDir.map(noop(name, "slope", _, slopeBudgetS))
+        val (wS, wL) = (small.wallS, large.fold(0.0)(_.wallS))
+        if (small.outcome == QueryGuard.Ok && wS > slowest._2) slowest = (name, wS)
+        (small.outcome, large.map(_.outcome)) match {
+          case (QueryGuard.Ok, None) => log(name, f"ok $wS%.1fs")
+          case (QueryGuard.Ok, Some(QueryGuard.Ok)) if SlopeGate.breach(wS, wL) =>
+            offend(name, f"SLOPE $wS%.1fs -> $wL%.1fs (> ${SlopeGate.DefaultCap}%.0fx)",
+              f"SLOPE BREACH $wS%.1fs -> $wL%.1fs")
+          case (QueryGuard.Ok, Some(QueryGuard.Ok)) => log(name, f"ok $wS%.1fs -> $wL%.1fs")
+          case (QueryGuard.Ok, _) => unfinished(name, "SLOPE ", large.get, slopeBudgetS)
+          case _ => unfinished(name, "", small, budgetS)
+        }
+        small +: large.toSeq
       }
-      // Registry-wide persist-lifecycle gate (VERDICT r11 item 2): this
-      // drive touches EVERY entry each round, so leak accounting here IS
-      // the repo-wide audit. A key that leaves a plain (non-checkpoint)
-      // persisted RDD behind and is not on the named multi-consumer
-      // allowlist fails the run by name; the sweep also puts the next
-      // query's timing on a defined block-manager state.
-      val swept = CacheLifecycle.sweep(spark)
-      if (swept.plain > 0 && !CacheLifecycle.persistAllowlist(name)) {
-        offenders += s"$name PERSIST LEAK: ${swept.plain} non-checkpoint cached RDD(s)"
-        System.err.println(s"[tripwire] $name PERSIST LEAK: ${swept.plain}")
-      }
+      val leaked = runs.map(_.leakedPersists).sum
+      if (leaked > 0)
+        offend(name, s"PERSIST LEAK: $leaked non-checkpoint cached RDD(s)",
+          s"PERSIST LEAK: $leaked")
     }
     spark.stop()
     if (offenders.nonEmpty) {
@@ -197,8 +137,13 @@ object Tripwire {
       offenders.foreach(o => System.err.println(s"[tripwire]   $o"))
       sys.exit(1)
     }
-    val mode = slopeDir.map(d => s" + slope vs $d").getOrElse("")
-    println(f"[tripwire] PASS: ${selected.size} queries under ${budgetS}s$mode " +
-      f"(slowest ${slowest._1} ${slowest._2}%.1fs)")
+    if (doubleDrive)
+      println(s"[tripwire] PASS: ${selected.size} queries double-driven " +
+        s"same-session, all hash-identical")
+    else {
+      val mode = slopeDir.map(d => s" + slope vs $d").getOrElse("")
+      println(f"[tripwire] PASS: ${selected.size} queries under ${budgetS}s$mode " +
+        f"(slowest ${slowest._1} ${slowest._2}%.1fs)")
+    }
   }
 }

@@ -8,6 +8,9 @@ import java.nio.file.{Files, Paths}
   *  - oracle_sql.json is written FIRST, before any query runs, so a
   *    mid-drive failure can never erase the oracle map;
   *  - per-query wall seconds are logged to stderr;
+  *  - every query is one [[QueryGuard.runKey]]: the block manager is
+  *    swept after it, and a plain persist left by a key outside the
+  *    persist allowlist is logged as PERSIST LEAK;
   *  - every query runs on a disposable worker thread under
   *    SPARK_GRAFT_QUERY_BUDGET_S wall seconds (default 120; <=0
   *    disables) — on breach the job group is cancelled AND the worker
@@ -59,38 +62,29 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => selected.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val sc = spark.sparkContext
     selected.foreach { name =>
-      val fn = queries(name)
-      val t0 = System.nanoTime()
-      def wall = (System.nanoTime() - t0) / 1e9
-      QueryGuard.run(sc, s"verify-$name", budgetS) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      val run = QueryGuard.runKey(spark, "verify", name, budgetS) {
+        queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-      } match {
+      }
+      run.outcome match {
         case QueryGuard.Ok =>
           // non-vacuity guard: q9b is the flagship value-bearing cosine
           // query — threshold drift silently emptying it bit once in r01
           if (name == "q9b_cosine_selfjoin_t038" &&
               spark.read.parquet(s"$outDir/$name").isEmpty)
             System.err.println(s"[verify] $name VACUOUS: 0 rows — threshold drift?")
-          System.err.println(f"[verify] $name ok $wall%.1fs")
+          System.err.println(f"[verify] $name ok ${run.wallS}%.1fs")
         case QueryGuard.Timeout =>
           QueryGuard.deleteRec(new java.io.File(s"$outDir/$name"))
           System.err.println(s"[verify] $name TIMEOUT after ${budgetS.get}s — output removed, skipped")
         case QueryGuard.Failed(e) =>
           QueryGuard.deleteRec(new java.io.File(s"$outDir/$name"))
-          System.err.println(f"[verify] $name failed after $wall%.1fs: ${e.getMessage}")
+          System.err.println(f"[verify] $name failed after ${run.wallS}%.1fs: ${e.getMessage}")
       }
-      // Defined JVM state between queries (VERDICT r11 items 1-2): a
-      // 604-query drive otherwise accumulates persist/localCheckpoint
-      // residue in the block manager and late queries inherit a
-      // degraded JVM. Plain (non-checkpoint) residue outside the named
-      // multi-consumer allowlist is a lifecycle bug — named here.
-      val swept = CacheLifecycle.sweep(spark)
-      if (swept.plain > 0 && !CacheLifecycle.persistAllowlist(name))
+      if (run.leakedPersists > 0)
         System.err.println(
-          s"[verify] $name PERSIST LEAK: ${swept.plain} non-checkpoint cached RDD(s)")
+          s"[verify] $name PERSIST LEAK: ${run.leakedPersists} non-checkpoint cached RDD(s)")
     }
     spark.stop()
   }

@@ -493,8 +493,11 @@ object VersionedTable {
           .groupBy("file_path", "bucket")
           .agg(org.apache.spark.sql.functions.expr("bitmap_or_agg(bmp)").as("bmp"))
       } else oldMask.map(_._1.unionByName(deleted)).getOrElse(deleted)
-    fullMask.coalesce(1).write.mode("errorifexists")
-      .parquet(dvMaskDir(baseDir, next))
+    // sorted within its one partition, so the same chain writes the
+    // same mask bytes (and history's n_bytes) on every run
+    fullMask.coalesce(1)
+      .sortWithinPartitions("file_path", if (bitmap) "bucket" else "row_index")
+      .write.mode("errorifexists").parquet(dvMaskDir(baseDir, next))
     val extraDir = assignments.zip(cols).map { case (as, cs) =>
       val dir = s"${snapshotDir(baseDir, next)}/_dv_extra"
       as.foldLeft(live.drop("__graft_dv_file", "__graft_dv_pos").where(cond)) {

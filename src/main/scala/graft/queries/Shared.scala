@@ -18,6 +18,21 @@ object Shared {
     root
   }
 
+  /** Run `body` with the session confs `kvs` set, then put each key
+    * back — its prior value, or unset if it had none — whether the
+    * body returned or threw: the drives share one session, so a
+    * query's confs must not outlive it. */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** The two years the year-over-year decompositions compare. */
   val Y0 = 1996
   val Y1 = 1997

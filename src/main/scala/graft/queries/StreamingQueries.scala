@@ -58,6 +58,11 @@ object StreamingQueries extends QueryBatch {
       .groupBy("user_id").agg(max("n_events").as("n_events"))
       .orderBy("user_id")
 
+  /** transformWithState REQUIRES the RocksDB state store: t6b and t14
+    * set it for their run only. */
+  private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** T6b: the same running per-user counts through the Spark 4
     * `transformWithState` StatefulProcessor — typed named ValueState
     * with optional TTL, the at-scale successor to
@@ -65,23 +70,14 @@ object StreamingQueries extends QueryBatch {
     * operator REQUIRES: the provider conf is set for the run and
     * restored after). Oracle identical to t6: the last update per user
     * must equal the batch count regardless of batching. */
-  val t6bTwsCounts: Q = (s, d) => {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      StreamingOps.runToMemory(
-        StreamingOps.runningUserCountsTWS(StreamingOps.eventsStream(s, d)),
-        "t6b_sink", OutputMode.Update())
-        .groupBy("user_id").agg(max("n_events").as("n_events"))
-        .orderBy("user_id")
-      // the stream has fully drained inside runToMemory; the batch agg
-      // above reads the memory sink and no longer needs the provider
-    } finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
+  val t6bTwsCounts: Q = (s, d) => Shared.withConf(s, rocksDb) {
+    StreamingOps.runToMemory(
+      StreamingOps.runningUserCountsTWS(StreamingOps.eventsStream(s, d)),
+      "t6b_sink", OutputMode.Update())
+      .groupBy("user_id").agg(max("n_events").as("n_events"))
+      .orderBy("user_id")
+    // the stream has fully drained inside runToMemory; the batch agg
+    // above reads the memory sink and no longer needs the provider
   }
 
   /** T7: stream–static join against the customer dim. */
@@ -128,20 +124,11 @@ object StreamingQueries extends QueryBatch {
   /** T14: event-time-timer sessionization (transformWithState +
     * RocksDB). The provider conf is set for this query and restored
     * after — TWS requires the RocksDB state store. */
-  val t14TimerSessions: Q = (s, d) => {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try
-      StreamingOps.runToMemory(
-        StreamingOps.sessionCloseTimers(StreamingOps.eventsStream(s, d)),
-        "t14_sink", OutputMode.Update())
-        .orderBy("user_id", "sess_start_s")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
+  val t14TimerSessions: Q = (s, d) => Shared.withConf(s, rocksDb) {
+    StreamingOps.runToMemory(
+      StreamingOps.sessionCloseTimers(StreamingOps.eventsStream(s, d)),
+      "t14_sink", OutputMode.Update())
+      .orderBy("user_id", "sess_start_s")
   }
 
   val queries: Map[String, Q] = Map(

@@ -43,29 +43,21 @@ object SurfaceR12f extends QueryBatch {
     * this query and restored afterwards (the drive shares one session);
     * the result is localized while the configs are live (t16 pattern)
     * so the driver's later write cannot execute under restored flags. */
-  val s30AggPushdown: Q = (s, d) => {
-    val prevList = s.conf.get("spark.sql.sources.useV1SourceList")
-    val prevPd = s.conf.getOption("spark.sql.parquet.aggregatePushdown")
-      .getOrElse("false")
-    try {
-      s.conf.set("spark.sql.sources.useV1SourceList", "avro,csv,json,kafka,orc,text")
-      s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      val df = s.read.parquet(s"$d/lineitem.parquet")
-        .agg(count(lit(1)).as("n_rows"),
-          min("l_orderkey").as("min_orderkey"),
-          max("l_orderkey").as("max_orderkey"),
-          min("l_quantity").as("min_qty"),
-          max("l_quantity").as("max_qty"),
-          min("l_extendedprice").as("min_price"),
-          max("l_extendedprice").as("max_price"))
-      require(df.queryExecution.executedPlan.toString.contains("PushedAggregation"),
-        "s30: parquet aggregate pushdown did not engage — plan regressed")
-      val rows = df.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), df.schema)
-    } finally {
-      s.conf.set("spark.sql.sources.useV1SourceList", prevList)
-      s.conf.set("spark.sql.parquet.aggregatePushdown", prevPd)
-    }
+  val s30AggPushdown: Q = (s, d) => Shared.withConf(s,
+      "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,text",
+      "spark.sql.parquet.aggregatePushdown" -> "true") {
+    val df = s.read.parquet(s"$d/lineitem.parquet")
+      .agg(count(lit(1)).as("n_rows"),
+        min("l_orderkey").as("min_orderkey"),
+        max("l_orderkey").as("max_orderkey"),
+        min("l_quantity").as("min_qty"),
+        max("l_quantity").as("max_qty"),
+        min("l_extendedprice").as("min_price"),
+        max("l_extendedprice").as("max_price"))
+    require(df.queryExecution.executedPlan.toString.contains("PushedAggregation"),
+      "s30: parquet aggregate pushdown did not engage — plan regressed")
+    val rows = df.collect().toSeq
+    s.createDataFrame(s.sparkContext.parallelize(rows, 1), df.schema)
   }
 
   /** LT83: Croston demand-rate forecast per part (keys ≡ 0 mod 7 to

@@ -113,7 +113,7 @@ object SurfaceR13a extends QueryBatch {
     // emulate the many-mapper reality of a production scan at any SF.
     val nFacts = lineitem(s, d).count()
     val hotBytesEst = math.max(4096L, (nFacts / 2) * 8L)
-    val keep = Seq(
+    Shared.withConf(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
@@ -122,10 +122,7 @@ object SurfaceR13a extends QueryBatch {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
         (hotBytesEst / 8).toString,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = keep.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      keep.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val facts = lineitem(s, d).select(
         when(col("l_orderkey") % 10 < 5, lit(0L))
           .otherwise(col("l_orderkey") % 1000).as("k"),
@@ -154,9 +151,6 @@ object SurfaceR13a extends QueryBatch {
           "in the post-AQE plan")
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("g")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 

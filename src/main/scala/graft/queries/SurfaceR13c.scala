@@ -77,13 +77,10 @@ object SurfaceR13c extends QueryBatch {
       expr("CAST(floor(l_extendedprice * 100 + 5e-1) AS BIGINT)").as("qp"))
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .format("parquet").saveAsTable(s"$db.li_b")
-    val keep = Seq(
+    withConf(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.sources.bucketing.enabled" -> "true")
-    val prev = keep.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      keep.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.sources.bucketing.enabled" -> "true") {
       // no orderBy here: a global sort would append a legitimate range
       // Exchange and mask the assertion; rows re-sort after collect.
       // The post-agg residue filter (a narrow Filter, never an
@@ -106,9 +103,6 @@ object SurfaceR13c extends QueryBatch {
         "s33: expected a sort-merge join over the bucketed tables")
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("o_orderkey")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -135,16 +129,13 @@ object SurfaceR13c extends QueryBatch {
       .write.format("parquet").saveAsTable(s"$db.li_s")
     val dimBytes = s.table(s"$db.ord_s").queryExecution.optimizedPlan
       .stats.sizeInBytes
-    val keep = Seq(
+    withConf(s,
       // threshold under the dim FILE size but far over the filtered slice
       "spark.sql.autoBroadcastJoinThreshold" -> (dimBytes / 4).toString,
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> (dimBytes / 4).toString,
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.cbo.joinReorder.enabled" -> "true",
-      "spark.sql.adaptive.enabled" -> "false") // isolate CBO from AQE's runtime flip
-    val prev = keep.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      keep.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.adaptive.enabled" -> "false") { // isolate CBO from AQE's runtime flip
       // range predicate on o_custkey: ~1.5% of the keyspace — a shape
       // FilterEstimation can bound from column min/max (a modulo or
       // UDF-ish predicate gets no estimate and the flip never fires)
@@ -169,9 +160,6 @@ object SurfaceR13c extends QueryBatch {
           "after ANALYZE — column statistics are not reaching the planner")
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("o_orderstatus")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 

@@ -65,11 +65,11 @@ object SurfaceR6e extends QueryBatch {
     * last statement's result. The data-derived threshold (mean discount)
     * flows through a script variable instead of client-side string
     * templating. Each statement is still a full Catalyst plan — the
-    * scripting layer adds control flow, not a bypass.
+    * scripting layer adds control flow, not a bypass. Scripting is on
+    * by default in Spark 4.1, so the query sets no conf.
     */
   val x10SqlScripting: Q = (s, d) => {
     lineitem(s, d).createOrReplaceTempView("graft_x10_lineitem")
-    s.conf.set("spark.sql.scripting.enabled", "true")
     s.sql(Orc.round4Sql(
       """BEGIN
         |  DECLARE thr DOUBLE DEFAULT 0.0;

@@ -126,4 +126,45 @@ class DvBitmapSpec extends SparkSpec {
       assert(readKeys() === expect)
     } finally spark.conf.set(key, old)
   }
+
+  test("DV masks are written in key order: one chain, built twice, writes the same bytes") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Path, Paths}
+    val seed = Paths.get(freshRoot()); val root = Paths.get(freshRoot())
+    VersionedTable.create(seed.toString,
+      (1L to 5000L).map(k => (k, k * 3)).toDF("k", "v").repartition(2))
+    def parquetIn(dir: Path): Seq[Path] =
+      Files.list(dir).iterator.asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    // k%7 then k%3: the v3 row mask's prior rows and new rows interleave
+    // by row index, so an unsorted union writes them out of key order
+    def build(): (Seq[Seq[Byte]], Seq[Long]) = {
+      QueryGuard.deleteRec(root.toFile)
+      val walk = Files.walk(seed)
+      try walk.iterator.asScala.foreach { p =>
+        val t = root.resolve(seed.relativize(p))
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      } finally walk.close()
+      VersionedTable.deleteWhereDV(spark, root.toString, col("k") % 7 === 0)
+      VersionedTable.deleteWhereDV(spark, root.toString, col("k") % 3 === 0)
+      VersionedTable.deleteWhereDVBitmap(spark, root.toString, col("k") % 5 === 0)
+      val masks = (2 to 4).flatMap(v => parquetIn(root.resolve(s"v$v/_dv")))
+        .map(p => Files.readAllBytes(p).toSeq)
+      (masks, VersionedTable.history(spark, root.toString)
+        .orderBy("version").select("n_bytes").as[Long].collect().toSeq)
+    }
+    val (masks1, bytes1) = build()
+    def keys(v: Int, c: String) = spark.read.parquet(s"$root/v$v/_dv")
+      .select(col("file_path"), col(c).cast("long")).as[(String, Long)].collect().toSeq
+    Seq(2 -> "row_index", 3 -> "row_index", 4 -> "bucket").foreach { case (v, c) =>
+      val ks = keys(v, c)
+      val inOrder = ks == ks.sorted
+      assert(inOrder, s"v$v mask is not in (file_path, $c) order")
+    }
+    val (masks2, bytes2) = build()
+    val sameBytes = masks1 == masks2
+    assert(masks1.size === 3)
+    assert(sameBytes, "the same chain wrote different mask bytes")
+    assert(bytes1 === bytes2, "history n_bytes differ between two builds of one chain")
+  }
 }

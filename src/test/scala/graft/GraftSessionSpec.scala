@@ -89,4 +89,21 @@ class GraftSessionSpec extends SparkSpec {
         modeAfter(new RawLocalFileSystem, s"stock$octal", perm), s"mode $octal")
     }
   }
+
+  test("withConf restores a set key and unsets a fresh one, after success and after a throw") {
+    import graft.queries.Shared.withConf
+    val (set, fresh) = ("spark.sql.shuffle.partitions", "spark.graft.spec.withConfFresh")
+    val before = spark.conf.get(set)
+    assert(spark.conf.getOption(fresh).isEmpty)
+    val seen = withConf(spark, set -> "7", fresh -> "on") {
+      (spark.conf.get(set), spark.conf.get(fresh))
+    }
+    assert(seen == ("7", "on"))
+    assert(spark.conf.get(set) == before && spark.conf.getOption(fresh).isEmpty)
+    val e = intercept[IllegalStateException] {
+      withConf(spark, set -> "9", fresh -> "on") { throw new IllegalStateException("boom") }
+    }
+    assert(e.getMessage == "boom")
+    assert(spark.conf.get(set) == before && spark.conf.getOption(fresh).isEmpty)
+  }
 }

@@ -6,6 +6,9 @@ import java.nio.file.Files
   * a DRIVER-side hang (which `cancelJobGroup` alone cannot unblock) and
   * continue with the remaining queries, and a dead query's partial
   * output must be removed, not left for the driver to score as WRONG.
+  * The shared per-key run on top of it ([[QueryGuard.runKey]]) must
+  * return the body's value, judge leaks by key, and sweep after every
+  * run, a failed one too.
   */
 class VerifyWatchdogSpec extends SparkSpec {
 
@@ -48,5 +51,25 @@ class VerifyWatchdogSpec extends SparkSpec {
     Files.writeString(new java.io.File(sub, "x.parquet").toPath, "partial")
     QueryGuard.deleteRec(root)
     assert(!root.exists())
+  }
+
+  test("runKey: the value comes back, leaks are judged by key, the sweep runs even on failure") {
+    CacheLifecycle.sweep(spark) // start from an empty block manager
+    def persisted() = { val df = spark.range(10).toDF("x").persist(); df.count(); df }
+    def empty() = spark.sparkContext.getPersistentRDDs.isEmpty
+    val leaky = QueryGuard.runKey(spark, "spec", "spec_leaky", Some(30L))(persisted().count())
+    assert(leaky.outcome == QueryGuard.Ok && leaky.value.contains(10L) && leaky.wallS > 0)
+    assert(leaky.leakedPersists == 1 && empty())
+    val allowed = QueryGuard.runKey(spark, "spec", "lj2_prefix_jaccard", Some(30L))(persisted())
+    assert(allowed.outcome == QueryGuard.Ok && allowed.leakedPersists == 0 && empty())
+    val failed = QueryGuard.runKey(spark, "spec", "spec_failing", Some(30L)) {
+      persisted(); throw new IllegalArgumentException("boom")
+    }
+    failed.outcome match {
+      case QueryGuard.Failed(e) => assert(e.getMessage == "boom")
+      case other => fail(s"expected Failed, got $other")
+    }
+    assert(failed.value.isEmpty && failed.leakedPersists == 1 && empty())
+    assert(intercept[IllegalArgumentException](failed.get).getMessage == "boom")
   }
 }
