@@ -234,20 +234,25 @@ object SparkEntry {
 
   /** The keys of `keys` (default: the registry, in its iteration order)
     * that a comma-separated spec selects, in that order. An entry that
-    * names a key selects exactly that key; any other entry is a prefix
-    * and selects every key it starts. An entry that matches no key, or a
-    * spec with no entries, throws (naming the entries), so a misspelled
-    * list fails before any work instead of running a partial or empty
-    * drive. */
+    * ends in `*` is a prefix and selects every key it starts; any other
+    * entry must name a key exactly and selects only it. An entry that
+    * is not a key (the throw names it and how many keys `entry*` would
+    * select), a prefix that starts no key, or a spec with no entries
+    * throws, so a misspelled list fails before any work instead of
+    * running a partial, widened or empty drive. */
   def select(spec: String, keys: Seq[String] = queries.keys.toSeq): Seq[String] = {
     val entries = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val (exact, prefixes) = entries.partition(keys.toSet)
-    val unknown = prefixes.filterNot(p => keys.exists(_.startsWith(p)))
     if (entries.isEmpty)
       throw new IllegalArgumentException(s"key spec '$spec' selects no key")
+    val (prefixEntries, exact) = entries.partition(_.endsWith("*"))
+    val prefixes = prefixEntries.map(_.stripSuffix("*"))
+    def starting(p: String) = keys.count(_.startsWith(p))
+    val unknown =
+      exact.filterNot(keys.toSet).map(e => s"'$e' ($e* would select ${starting(e)})") ++
+        prefixes.filter(starting(_) == 0).map(p => s"'$p*' (starts no key)")
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
-        s"key spec names unknown key(s) or prefix(es): ${unknown.mkString(", ")}")
+        s"key spec entries match no key: ${unknown.mkString(", ")}")
     keys.filter(k => exact.contains(k) || prefixes.exists(k.startsWith))
   }
 

@@ -21,8 +21,9 @@ package graft
   *
   * Usage:  runMain graft.SpillGate [sfDir]   (or java -cp ... graft.SpillGate)
   *   SPARK_GRAFT_ONLY         key spec ([[SparkEntry.select]], as in
-  *                            Verify and Tripwire), default the 4 heavy
-  *                            probes
+  *                            Verify and Tripwire: exact keys, or
+  *                            prefixes ending in `*`), default the 4
+  *                            heavy probes
   *   SPARK_GRAFT_CPUS         local[N], default 8
   *   SPARK_GRAFT_FORCE_SPILL_ELEMS  when set, every external sorter /
   *     hash-agg force-spills after N in-memory elements (Spark's

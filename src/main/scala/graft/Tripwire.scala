@@ -31,8 +31,9 @@ object SlopeGate {
   * Usage: runMain graft.Tripwire [sfDir]   (default /root/testdata/sf0.001)
   *   SPARK_GRAFT_TRIPWIRE_BUDGET_S  per-query ceiling, default 30
   *
-  * SPARK_GRAFT_ONLY=k1,prefix2 restricts the drive to the keys
-  * [[SparkEntry.select]] resolves (exit 1 if an entry matches none) — the
+  * SPARK_GRAFT_ONLY=k1,prefix2* restricts the drive to the keys
+  * [[SparkEntry.select]] resolves (an entry is an exact key unless it
+  * ends in `*`; exit 1 if an entry matches none) — the
   * decade-3 run (sf0.1 → the generated target/sf1) uses this to time
   * the headline + heavy-probe subset under a long budget without
   * paying an hours-long full-registry drive at 6 M rows.

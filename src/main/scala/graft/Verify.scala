@@ -23,11 +23,12 @@ import java.nio.file.{Files, Paths}
   *    partially-written parquet dir it would score as WRONG.
   *
   * Usage: runMain graft.Verify <sfDir> <outDir>
-  *   SPARK_GRAFT_ONLY=k1,prefix2  drive only the keys
+  *   SPARK_GRAFT_ONLY=k1,prefix2*  drive only the keys
   *     [[SparkEntry.select]] resolves (and write only their slice of
   *     oracle_sql.json), so a new query family checks with
-  *     `scripts/check.py` in seconds; an entry that matches no key
-  *     exits 1 before a session is built.
+  *     `scripts/check.py` in seconds; an entry is an exact key unless
+  *     it ends in `*`, and one that matches no key exits 1 before a
+  *     session is built.
   */
 object Verify {
   def main(args: Array[String]): Unit = {

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * commit cost is ∝ the delta and read-as-of is one checkpoint scan
   * plus a bounded replay — exactly the Delta-log/Iceberg-manifest
   * storage trade, built from the ops this repo already proved: the
-  * replay IS [[Upsert.applyCdc]] (the lp26 fold — one window pass by
-  * key over checkpoint ∪ deltas, cost ∝ rows touched, regardless of
-  * how many commits the chain holds).
+  * replay is merge-on-read, the checkpoint probed by an anti-join on
+  * the deltas' keys and only the deltas folded by [[Upsert.applyCdc]]
+  * (the lp26 fold — one pass by key, cost ∝ rows touched, regardless
+  * of how many commits the chain holds).
   *
   * Layout:
   * {{{
@@ -58,14 +59,22 @@ import org.apache.spark.sql.functions._
   * makes replay a window pass instead of positional bookkeeping. Key
   * tuples must be unique within each committed delta (validated,
   * ANSI-MERGE style) and non-null (asserted at commit — fail loudly,
-  * the changes() lesson from ADVICE r13).
+  * the changes() lesson from ADVICE r13), and unique within every
+  * checkpoint: the replay probes checkpoint rows by key, so each
+  * untouched checkpoint row is returned as stored.
   *
   * Scale shape at 100 TB: commits write O(|delta|) bytes (the q64 key
   * requires this with a byte census against a full-snapshot twin);
   * `readAsOf` scans one checkpoint + ≤`checkpointEvery` deltas and
-  * pays ONE shuffle on the key; `changelog` between versions is a
-  * pure union of stored delta files — zero joins, the CDC-feed read
-  * path that VersionedTable.changes needs a full-outer diff for.
+  * shuffles only the delta rows: the checkpoint is scanned once and
+  * probed against the deltas' keys (broadcast while the deltas' files
+  * fit Spark's `autoBroadcastJoinThreshold`; past it a shuffle join,
+  * the cost a whole-table fold pays), never shuffled. Each run of
+  * consecutive deltas that share a recorded schema is one scan, so the
+  * driver pays one scan node per run, not per version. `changelog`
+  * between versions is a pure union of stored delta files — zero
+  * joins, the CDC-feed read path that VersionedTable.changes needs a
+  * full-outer diff for.
   *
   * Reference: /root/reference is empty (SURVEY.md §0.1); contract area
   * SURVEY.md §2.11 + the 100 TB efficiency brief, VERDICT r13 item 2.
@@ -240,16 +249,22 @@ object DeltaChain {
     * metadata and UDTs the way the footer does; older checkpoint
     * sidecars are DDL. */
   private def storedSchema(
-      spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType = {
-    val p = Paths.get(dir, SchemaSidecar)
-    if (!Files.exists(p)) spark.read.parquet(dir).schema
-    else {
-      val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      if (s.startsWith("{"))
+      spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType =
+    sidecar(dir) match {
+      case None => spark.read.parquet(dir).schema
+      case Some(s) if s.startsWith("{") =>
         org.apache.spark.sql.types.DataType.fromJson(s)
           .asInstanceOf[org.apache.spark.sql.types.StructType]
-      else org.apache.spark.sql.types.StructType.fromDDL(s)
+      case Some(s) => org.apache.spark.sql.types.StructType.fromDDL(s)
     }
+
+  /** A chain directory's sidecar text; None for a dir written before
+    * sidecars. */
+  private def sidecar(dir: String): Option[String] = {
+    val p = Paths.get(dir, SchemaSidecar)
+    if (Files.exists(p))
+      Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+    else None
   }
 
   /** Read a chain directory (checkpoint, change record or staging dir)
@@ -269,7 +284,11 @@ object DeltaChain {
   private def hasCheckpoint(baseDir: String, v: Int): Boolean =
     Files.exists(Paths.get(checkpointDir(baseDir, v)))
 
-  /** Create the table at version 1: one checkpoint, no delta.
+  /** Create the table at version 1: one checkpoint, no delta. The
+    * keys of `df` must be unique: every replay probes the checkpoint by
+    * key and returns the rows no delta touches as stored, duplicates
+    * included. Not validated here (it would cost a job per create);
+    * every checkpoint a replay writes is unique by construction.
     *
     * `partitionBy` (the 100 TB layout knob): checkpoints — the BIG
     * scans every read pays — are written Hive-partitioned on these
@@ -567,54 +586,113 @@ object DeltaChain {
     }
   }
 
-  /** The tagged record stream every replay reads: checkpoint `cp`
-    * (`_op` = I) ∪ every delta in (cp, to] (its stored `_op`), each
-    * projected to version `to`'s shape and `tableCols` and tagged
-    * `_seq` = the version it was stored at. */
-  private def records(
+  /** The version of the change record a row was read from: its file's
+    * own parent dir, the LAST /d<digits>/ path segment (an unanchored
+    * extract took the FIRST match, so a baseDir containing '/d7/'
+    * stamped every row 7; ADVICE r15). */
+  private def recordVersion: org.apache.spark.sql.Column =
+    regexp_extract(col("_metadata.file_path"), "/d(\\d+)/[^/]*$", 1).cast("int")
+
+  /** The change records of versions (from, to], one frame per RUN: a
+    * maximal range of consecutive versions whose sidecars are
+    * byte-identical and inside which no schema event lands. Each run
+    * is ONE multi-path scan under that schema, projected to version
+    * `to`'s shape (no event inside the run, so every file in it
+    * projects alike), with `_seq` — the version each row was stored
+    * at, from its file's own `d<v>` dir — as the last column. A scan
+    * node costs its own file listing and Hadoop-conf broadcast on the
+    * driver, so a replay pays that per run, not per version. A dir
+    * without a sidecar is its own run, read through the footer. A run
+    * stops short of Spark's parallel-listing threshold, so building
+    * the scan lists its dirs on the driver and starts no job. */
+  private def deltaRuns(
+      spark: SparkSession,
+      baseDir: String,
+      m: Meta,
+      from: Int,
+      to: Int): Seq[DataFrame] = {
+    val events = m.schemaEvents.map(_.version).toSet
+    val maxRun =
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt
+    val runs = ((from + 1) to to).map(v => v -> sidecar(deltaDir(baseDir, v)))
+      .foldLeft(List.empty[(Vector[Int], Option[String])]) {
+        case ((run, s) :: done, (v, sv))
+            if sv.isDefined && sv == s && !events(v) && run.size < maxRun =>
+          (run :+ v, s) :: done
+        case (done, (v, sv)) => (Vector(v), sv) :: done
+      }.reverse
+    runs.map { case (run, s) =>
+      val dirs = run.map(deltaDir(baseDir, _))
+      val raw =
+        if (s.isEmpty) readDir(spark, dirs.head)
+        else spark.read.schema(storedSchema(spark, dirs.head)).parquet(dirs: _*)
+      val p = projectTo(raw.withColumn("_seq", recordVersion), m, run.head, to)
+      p.select(p.columns.filter(_ != "_seq").map(col) :+ col("_seq"): _*)
+    }
+  }
+
+  /** Every delta in (cp, to] as one frame: `tableCols` at version `to`,
+    * the stored `_op`, and `_seq`. */
+  private def deltaRecords(
       spark: SparkSession,
       baseDir: String,
       m: Meta,
       cp: Int,
       to: Int,
-      tableCols: Seq[String]): DataFrame = {
-    val base = projectTo(readDir(spark, checkpointDir(baseDir, cp)), m, cp, to)
-      .select(tableCols.map(col) :+ lit("I").as(OpCol): _*)
-      .withColumn("_seq", lit(cp))
-    ((cp + 1) to to).map { v =>
-      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, to)
-        .select(tableCols.map(col) :+ col(OpCol): _*)
-        .withColumn("_seq", lit(v))
-    }.foldLeft(base)(_.unionByName(_))
-  }
+      tableCols: Seq[String]): DataFrame =
+    deltaRuns(spark, baseDir, m, cp, to)
+      .map(_.select(tableCols.map(col) :+ col(OpCol) :+ col("_seq"): _*))
+      .reduce(_.unionByName(_))
 
-  /** The distinct keys the deltas in (from, to] touch, projected to
-    * version `to`. */
-  private def touchedKeys(
+  /** Checkpoint `cp`, projected to version `to`'s shape and `tableCols`. */
+  private def checkpointRows(
       spark: SparkSession,
       baseDir: String,
       m: Meta,
-      from: Int,
-      to: Int): DataFrame =
-    ((from + 1) to to).map { v =>
-      projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, to)
-        .select(m.keys.map(col): _*)
-    }.reduce(_.unionByName(_)).distinct()
+      cp: Int,
+      to: Int,
+      tableCols: Seq[String]): DataFrame =
+    projectTo(readDir(spark, checkpointDir(baseDir, cp)), m, cp, to)
+      .select(tableCols.map(col): _*)
+
+  /** The tagged record stream a per-key fold over the whole history
+    * reads ([[changesRange]], [[restore]]): the checkpoint rows of
+    * version `cp` (`_op` = I, `_seq` = cp) ∪ `deltas`. */
+  private def records(cpRows: DataFrame, cp: Int, deltas: DataFrame): DataFrame =
+    cpRows.withColumn(OpCol, lit("I")).withColumn("_seq", lit(cp))
+      .unionByName(deltas)
+
+  /** The keys the `deltas` stored above version `from` touch — the same
+    * delta frame the fold reads, filtered, never a second per-dir read;
+    * duplicates are harmless to the semi-join that consumes it. */
+  private def touchedKeys(deltas: DataFrame, keys: Seq[String], from: Int): DataFrame =
+    deltas.where(col("_seq") > from).select(keys.map(col): _*)
 
   /** Checkpoint `fromCp` + deltas (fromCp, to] → the exact state at
-    * `to`: one [[Upsert.applyCdc]] window pass by key over the
-    * [[records]] stream keeps the last write per key and drops deleted
-    * keys. ONE shuffle, chain length only widens the union — the lp26
-    * fold. */
+    * `to`, merge-on-read: the checkpoint is scanned once and PROBED —
+    * its rows whose key no delta touches pass through an anti-join
+    * against the deltas' keys — and [[Upsert.applyCdc]] folds only the
+    * delta rows, keeping the last write per touched key and dropping
+    * deleted keys. Only delta rows are shuffled: Spark broadcasts the
+    * key side when the deltas' files fit its `autoBroadcastJoinThreshold`,
+    * and past it falls back to a shuffle join, the cost the
+    * whole-table fold always paid. Equal to that fold whenever the
+    * checkpoint's keys are unique, which every checkpoint a replay
+    * writes is by construction and [[create]] requires of its input. */
   private def replay(
       spark: SparkSession,
       baseDir: String,
       m: Meta,
       fromCp: Int,
       to: Int,
-      tableCols: Seq[String]): DataFrame =
-    Upsert.applyCdc(records(spark, baseDir, m, fromCp, to, tableCols),
-      m.keys, "_seq", OpCol).select(tableCols.map(col): _*)
+      tableCols: Seq[String]): DataFrame = {
+    val deltas = deltaRecords(spark, baseDir, m, fromCp, to, tableCols)
+    checkpointRows(spark, baseDir, m, fromCp, to, tableCols)
+      .join(deltas.select(m.keys.map(col): _*), m.keys, "left_anti")
+      .select(tableCols.map(col): _*)
+      .unionByName(Upsert.applyCdc(deltas, m.keys, "_seq", OpCol)
+        .select(tableCols.map(col): _*))
+  }
 
   /** Time travel: nearest checkpoint at-or-below `version` + replay.
     * Hash-identical to a full snapshot of the same chain (the q64
@@ -656,15 +734,11 @@ object DeltaChain {
     require(fromVersion < toVersion && vs.contains(fromVersion) && vs.contains(toVersion),
       s"DeltaChain.changelog: need committed fromVersion < toVersion, " +
         s"got $fromVersion, $toVersion of ${vs.mkString("[", ",", "]")}")
-    val m = meta(baseDir)
-    ((fromVersion + 1) to toVersion)
-      .map { v =>
-        // pre-event deltas project like every other reader, so a
-        // window spanning a schema change unions cleanly and the
-        // consumer sees one schema (the window-end's)
-        projectTo(readDir(spark, deltaDir(baseDir, v)), m, v, toVersion)
-          .withColumn("_commit_version", lit(v))
-      }
+    // pre-event deltas project like every other reader, so a window
+    // spanning a schema change unions cleanly and the consumer sees one
+    // schema (the window-end's)
+    deltaRuns(spark, baseDir, meta(baseDir), fromVersion, toVersion)
+      .map(_.withColumnRenamed("_seq", "_commit_version"))
       .reduce(_.unionByName(_))
       .withColumn("_change_type",
         when(col(OpCol) === "D", lit("delete")).otherwise(lit("upsert")))
@@ -807,7 +881,8 @@ object DeltaChain {
     * update_preimage / update_postimage, state-authoritative
     * preimages, no-op deletes dropped), each row tagged
     * `_commit_version` (q66b REQUIREs the set-equivalence in-key).
-    * ONE shuffle on the key; chain length only widens the union. */
+    * ONE shuffle on the key; the deltas are read one scan per run
+    * ([[deltaRuns]]), so chain length only widens those scans. */
   def changesRange(
       spark: SparkSession,
       baseDir: String,
@@ -820,7 +895,9 @@ object DeltaChain {
     val m = meta(baseDir)
     val cpv = diskCheckpoints(baseDir).filter(_ <= fromVersion).max
     val tableCols = tableColsAt(spark, baseDir, m, toVersion)
-    val all = records(spark, baseDir, m, cpv, toVersion, tableCols)
+    val deltas = deltaRecords(spark, baseDir, m, cpv, toVersion, tableCols)
+    val all = records(
+      checkpointRows(spark, baseDir, m, cpv, toVersion, tableCols), cpv, deltas)
     // Prune to keys actually touched INSIDE the emission window before
     // the one shuffle (guide §2.3): a key with no record in
     // (fromVersion, toVersion] emits nothing and supplies a preimage to
@@ -829,23 +906,23 @@ object DeltaChain {
     // record of every touched key (lag() per key unchanged → output
     // identical, q66b's in-key set-equivalence REQUIRE re-verifies it),
     // while the window sort/shuffle then carries bytes ∝ rows touched
-    // in the window, never ∝ table size.
+    // in the window, never ∝ table size. The touched keys are the
+    // window's rows of the same delta frame the pass reads.
     //
     // CARDINALITY GUARD (VERDICT r17 "what's wrong" #2): the prune
-    // itself re-reads every window delta, distincts the keys and
-    // semi-joins — worth it when touched ≪ table (the CDC case), pure
-    // overhead when the window rewrites most of the table (the r17
-    // cdf_range probe: 105k delta rows over a 150k base, range_ms
-    // 1,219 → 2,968). Decide from file metadata alone (directory
-    // listings, no data read): skip the semi-join when the window's
+    // itself re-reads every window delta and semi-joins — worth it when
+    // touched ≪ table (the CDC case), pure overhead when the window
+    // rewrites most of the table (the r17 cdf_range probe: 105k delta
+    // rows over a 150k base, range_ms 1,219 → 2,968). Decide from file
+    // metadata alone (directory listings, no data read): skip the
+    // semi-join when the window's
     // delta bytes are ≥ 1/4 of everything the pass scans anyway
     // (checkpoint + history since it) — past that point the touched-key
     // set approaches table scale and the "degrades to the shuffle we
     // were paying" arm IS the shuffle, minus the prune's own re-read.
     val joined =
       if (rangePruneActive(baseDir, fromVersion, toVersion))
-        all.join(touchedKeys(spark, baseDir, m, fromVersion, toVersion),
-          m.keys, "left_semi")
+        all.join(touchedKeys(deltas, m.keys, fromVersion), m.keys, "left_semi")
       else all
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(m.keys.map(col): _*).orderBy(col("_seq"))
@@ -1219,12 +1296,7 @@ object DeltaChain {
     val raw = spark.readStream
       .schema(schema)
       .parquet(s"$baseDir/d*")
-    // version from the LAST /d<digits>/ path segment (the file's own
-    // parent dir) — an unanchored extract took the FIRST match, so a
-    // baseDir containing '/d7/' stamped every row 7 (ADVICE r15)
-    val ver = regexp_extract(
-      col("_metadata.file_path"), "/d(\\d+)/[^/]*$", 1).cast("int")
-    val withVer = raw.withColumn("_commit_version", ver)
+    val withVer = raw.withColumn("_commit_version", recordVersion)
     // pass 1: segment-resolve each head column's RAW value per row —
     // which physical name held it at the row's commit version (null
     // below the incarnation's birth)
@@ -1333,10 +1405,11 @@ object DeltaChain {
     * landed on the checkpoint cadence); everything else is a data
     * delta, except a manifest version whose change record a truncate
     * reclaimed (checkpoint_anchor). Row counts come from ONE multi-dir
-    * scan grouped by the path-extracted version — O(1) Spark jobs for
-    * any chain length (ADVICE r15: the per-version count() loop paid
-    * 10k job launches for a 10k-commit audit view); bytes are
-    * directory listings. At 100 TB this is a manifest walk plus one
+    * scan, read under the `_op` column every change record stores (no
+    * footer inference) and grouped by the path-extracted version —
+    * O(1) Spark jobs for any chain length (ADVICE r15: the per-version
+    * count() loop paid 10k job launches for a 10k-commit audit view);
+    * bytes are directory listings. At 100 TB this is a manifest walk plus one
     * column-pruned scan of the (delta-sized) change records, never a
     * table scan. */
   def history(spark: SparkSession, baseDir: String): DataFrame = {
@@ -1354,16 +1427,18 @@ object DeltaChain {
     val vs = versions(baseDir)
     val withDelta =
       vs.filter(v => Files.exists(Paths.get(deltaDir(baseDir, v))))
-    // one job counts every version's change rows: read all delta dirs,
-    // group by the file's own /d<version>/ segment; data columns are
-    // pruned away, so schema drift across rename/drop boundaries never
-    // touches the scan
+    // one job counts every version's change rows: read all delta dirs
+    // under the one column every change record stores, `_op` (no
+    // footer inference), and group by the file's own version, so schema
+    // drift across rename/drop boundaries never touches the scan
     val counts: Map[Int, Long] =
       if (withDelta.isEmpty) Map.empty
-      else spark.read.parquet(withDelta.map(deltaDir(baseDir, _)): _*)
-        .select(regexp_extract(
-          col("_metadata.file_path"), "/d(\\d+)/[^/]*$", 1)
-          .cast("int").as("__v"))
+      else spark.read
+        .schema(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(
+            OpCol, org.apache.spark.sql.types.StringType))))
+        .parquet(withDelta.map(deltaDir(baseDir, _)): _*)
+        .select(recordVersion.as("__v"))
         .groupBy("__v").count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     vs.map { v =>
@@ -1417,11 +1492,12 @@ object DeltaChain {
     // rows of both states) to find a diff that is usually tiny. Here
     // ONE pass over the same artifacts (anchor checkpoint + deltas —
     // exactly what the two readAsOf calls already required, so no new
-    // fallback window is needed) is semi-join-pruned to touched keys
-    // BEFORE its only shuffle, then a single per-key aggregate
-    // recovers both endpoint states: the latest record at-or-below
-    // toVersion is the key's state at toVersion (absent when none or
-    // deleted), the latest record overall is its state at head. Rows
+    // fallback window is needed) is semi-join-pruned to touched keys —
+    // the rows above toVersion of the same delta frame the pass reads,
+    // one scan per run — BEFORE its only shuffle, then a single per-key
+    // aggregate recovers both endpoint states: the latest record
+    // at-or-below toVersion is the key's state at toVersion (absent when
+    // none or deleted), the latest record overall is its state at head. Rows
     // emitted are EXACTLY the old form's: upsert the toVersion row
     // where it differs from (or is missing at) head; delete head keys
     // the target lacks. Shuffled bytes ∝ rows touched since
@@ -1429,8 +1505,10 @@ object DeltaChain {
     // shuffled) once.
     val cpv = diskCheckpoints(baseDir).filter(_ <= toVersion).max
     val pay = struct(tableCols.map(col): _*)
-    val grouped = records(spark, baseDir, m, cpv, current, tableCols)
-      .join(touchedKeys(spark, baseDir, m, toVersion, current), m.keys, "left_semi")
+    val deltas = deltaRecords(spark, baseDir, m, cpv, current, tableCols)
+    val grouped =
+      records(checkpointRows(spark, baseDir, m, cpv, current, tableCols), cpv, deltas)
+      .join(touchedKeys(deltas, m.keys, toVersion), m.keys, "left_semi")
       .groupBy(m.keys.map(col): _*)
       .agg(
         max_by(struct(col(OpCol).as("op"), pay.as("p")),

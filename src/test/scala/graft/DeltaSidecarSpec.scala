@@ -1,15 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBridge
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Laws of DeltaChain's recorded schemas: every chain directory carries
   * a `_graft_schema` sidecar, and a read of a directory that has one
@@ -19,13 +16,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 class DeltaSidecarSpec extends SparkSpec {
   import operators.DeltaChain
+  import ChainLayouts.{hashed, legacyCopy, sidecars}
 
-  private def freshRoot(): String = {
-    val f = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sidecar_${java.util.UUID.randomUUID().toString.take(8)}")
-    QueryGuard.deleteRecOnExit(f)
-    f.getAbsolutePath
-  }
+  private def freshRoot(): String = ChainLayouts.freshRoot("graft_sidecar")
 
   /** Runs `body` under a fresh job group and returns the call sites of
     * the jobs it started: (all of them, those outside any SQL
@@ -57,31 +50,6 @@ class DeltaSidecarSpec extends SparkSpec {
     (all.asScala.toSeq, outside.asScala.toSeq)
   }
 
-  private def sidecars(root: String): Seq[Path] = {
-    val walk = Files.walk(Paths.get(root))
-    try walk.iterator().asScala
-      .filter(_.getFileName.toString == "_graft_schema").toSeq
-    finally walk.close()
-  }
-
-  /** A copy of `root` laid out as a chain written before every directory
-    * had a sidecar: deltas carry none, checkpoints a DDL one. */
-  private def legacyCopy(root: String): String = {
-    val to = freshRoot()
-    val src = Paths.get(root)
-    val walk = Files.walk(src)
-    try walk.iterator().asScala.foreach { p =>
-      Files.copy(p, Paths.get(to).resolve(src.relativize(p).toString))
-    } finally walk.close()
-    sidecars(to).foreach { p =>
-      val dir = p.getParent.getFileName.toString
-      if (dir.startsWith("d")) Files.delete(p)
-      else Files.write(p, DataType.fromJson(new String(Files.readAllBytes(p), "UTF-8"))
-        .asInstanceOf[StructType].toDDL.getBytes("UTF-8"))
-    }
-    to
-  }
-
   /** Every read the chain offers at `head`, with `changesAt` at the
     * data commits `cdfAt`. */
   private def allReads(head: Int, cdfAt: Seq[Int])(root: String): Seq[(String, DataFrame)] =
@@ -92,21 +60,6 @@ class DeltaSidecarSpec extends SparkSpec {
         s"changesRange(1,$head)" -> DeltaChain.changesRange(spark, root, 1, head),
         s"changesRange(${head - 1},$head)" ->
           DeltaChain.changesRange(spark, root, head - 1, head))
-
-  /** name -> (schema, row count, exact sum of the per-row xxhash64 of
-    * each row's JSON rendering), all hashed in one job. */
-  private def hashed(frames: Seq[(String, DataFrame)]): Map[String, (StructType, Long, String)] = {
-    val hashes = frames.map { case (n, df) =>
-      df.select(lit(n).as("read"),
-        xxhash64(to_json(struct(df.columns.map(col).toIndexedSeq: _*))).as("h"))
-    }.reduce(_.unionByName(_))
-      .groupBy("read").agg(count(lit(1)), sum(col("h").cast("decimal(38,0)")))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), String.valueOf(r.get(2)))).toMap
-    frames.map { case (n, df) =>
-      val (rows, sum) = hashes.getOrElse(n, (0L, "null"))
-      n -> (df.schema, rows, sum)
-    }.toMap
-  }
 
   private def assertSameReads(root: String, legacy: String)(
       reads: String => Seq[(String, DataFrame)]): Unit = {

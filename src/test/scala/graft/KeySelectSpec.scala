@@ -16,16 +16,27 @@ class KeySelectSpec extends AnyFunSuite {
   }
 
   test("a prefix expands to all its keys, in registry order") {
-    assert(SparkEntry.select("q", keys) === Seq("q1", "q1b", "q10"))
+    assert(SparkEntry.select("q*", keys) === Seq("q1", "q1b", "q10"))
+    assert(SparkEntry.select("q1*", keys) === Seq("q1", "q1b", "q10"))
     val registry = SparkEntry.queries.keys.toSeq
-    assert(SparkEntry.select("q1,m4_logreg") ===
+    assert(SparkEntry.select("q1*,m4_logreg") ===
       registry.filter(k => k.startsWith("q1") || k == "m4_logreg"))
-    assert(SparkEntry.select("q1").size > 1)
+    assert(SparkEntry.select("q1*").size > 1)
   }
 
   test("an entry that matches no key fails, naming it") {
-    val e = intercept[IllegalArgumentException](SparkEntry.select("q1,q1x,zz", keys))
-    assert(e.getMessage.contains("q1x, zz"), e.getMessage)
+    val e = intercept[IllegalArgumentException](SparkEntry.select("q1,q1x,zz*", keys))
+    assert(e.getMessage.contains("'q1x'") && e.getMessage.contains("'zz*'"), e.getMessage)
+    assert(!e.getMessage.contains("'q1'"), e.getMessage)
+  }
+
+  test("a non-key entry is not widened to a prefix; the failure counts what entry* would select") {
+    val e = intercept[IllegalArgumentException](SparkEntry.select("q", keys))
+    assert(e.getMessage.contains("'q' (q* would select 3)"), e.getMessage)
+    val registry = SparkEntry.queries.keys.toSeq
+    val q1 = intercept[IllegalArgumentException](SparkEntry.select("q1,m4_logreg"))
+    assert(q1.getMessage.contains(
+      s"'q1' (q1* would select ${registry.count(_.startsWith("q1"))})"), q1.getMessage)
   }
 
   test("an empty spec fails") {
